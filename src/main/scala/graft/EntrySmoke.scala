@@ -1,9 +1,7 @@
 package graft
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(3)

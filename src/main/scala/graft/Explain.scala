@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan for the named
   * queries (or all) at the given SF dir — the tool used to keep every
   * operator's plan shape honest (pushed filters, pruned schemas, broadcast
@@ -11,12 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n===== $n =====")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic 10× scale-up dataset builder (SCALING.md "measured" section):
@@ -48,17 +48,11 @@ object ScaleCheck {
     val tablesWanted = sys.env.get("SPARK_GRAFT_TABLES")
       .map(_.split(",").toSet)
     def wanted(n: String): Boolean = tablesWanted.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def t(name: String): DataFrame = queries.Tables.t(spark, srcDir, name)
     def write(name: String, df: DataFrame): Unit = if (wanted(name)) {
-      df.repartition(cpus.toInt)
+      df.repartition(Session.cpus)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
       println(s"[scale] $name -> $outDir (${spark.read.parquet(s"$outDir/$name.parquet").count()} rows)")
     }

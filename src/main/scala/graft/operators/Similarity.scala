@@ -345,7 +345,7 @@ object Similarity {
     * cell population constant (the SemDeDup / IVF discipline), brute
     * force turns quadratic in N — measured as 132 s of a 130 s
     * density-preserving semdedup run at N = 200k, k = 1501
-    * (ProbeDensityScale; SCALING.md). Route (the faiss-style IVF recipe
+    * (BENCH_DENSITY.json; SCALING.md). Route (the faiss-style IVF recipe
     * applied to assignment): (1) cluster the k CENTROIDS into `groups`
     * (default ⌈√k⌉) coarse groups — one k-means over the centroid table,
     * k rows, never the corpus; (2) per vector, pick the `nprobe` nearest
@@ -362,7 +362,7 @@ object Similarity {
     *     broadcast, no checkpoint barrier; 2.7 vs 4.3 s on the sf0.1
     *     16-centroid 4 KB-index bench query). The crossover sits BELOW
     *     2 MB: at a 2 MB index the sharded form already runs 1.8×
-    *     faster on a 500-row corpus (ProbeIvfBroadcast, d = 1024), and
+    *     faster on a 500-row corpus (BENCH_DENSITY.json, d = 1024), and
     *     bigger corpora amortize the extra join stages further, so the
     *     1 MiB default is conservative toward the map form.
     *   - index > `shardBytes`: SHARDED — one packed row PER coarse group
@@ -372,7 +372,7 @@ object Similarity {
     *     applies per GROUP pack (k·d/groups floats), so the operator
     *     survives the k ∝ N regime it exists for (millions of centroids
     *     × wide embeddings) where the monolithic map row OOMs first —
-    *     ProbeIvfBroadcast measured the map form DEAD
+    *     the index probe (BENCH_DENSITY.json) measured the map form DEAD
     *     (OutOfMemoryError) at a 134 MB index in the heap the sharded
     *     form completes in, and already 1.8× slower at 34 MB. The
     *     nprobe join right sides are the same plan subtree, so exchange
@@ -476,7 +476,7 @@ object Similarity {
     * group→members map ROW, broadcast whole. Correct, oracled, and the
     * fastest shape while the one map value — O(k·d) — is genuinely
     * small; past `shardBytes` it is the single-object scale ceiling the
-    * sharded form removes (ProbeIvfBroadcast: OOM at a 134 MB index in
+    * sharded form removes (BENCH_DENSITY.json: OOM at a 134 MB index in
     * the heap the sharded form completes in). Spec-pinned
     * assignment-identical to the sharded form at exhaustive AND small
     * nprobe.
@@ -842,7 +842,7 @@ object Similarity {
   /** [[semDedupSkewSafe]] from a PRE-ASSIGNED (id, emb, cell) frame —
     * the composition point for [[assignToCentroidsIvf]] when the
     * centroid count scales with the corpus (brute-force assignment is
-    * then the quadratic term, not the pair verify — ProbeDensityScale),
+    * then the quadratic term, not the pair verify — BENCH_DENSITY.json),
     * and for reusing a persisted assignment across dedup runs.
     */
   def semDedupSkewSafeAssigned(preAssigned: DataFrame, id: String,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftConf
+
 /** Distributed suffix-array construction over the token stream of a
   * document corpus, by prefix doubling (Manber–Myers 1990; the sort/join
   * recurrence is the standard bulk-synchronous formulation). The suffix
@@ -280,7 +282,7 @@ object SuffixArray {
       // partitioning no longer counts as co-partitioned), i.e. 6
       // corpus-sized exchanges per round. The window is NOT free — cur is
       // a localCheckpoint whose LogicalRDD reports UnknownPartitioning on
-      // this Spark (plan-verified, ProbeSortedCheckpoint), so the window
+      // this Spark (plan-verified, OPTIMIZATION_r13.md #4), so the window
       // pays ONE hash(doc) exchange per round — but one exchange replaces
       // the former six. An off-the-end lead is NULL → coalesce 0, the
       // shared end-sentinel, exactly as the left joins produced.
@@ -454,9 +456,8 @@ object SuffixArray {
     // The switch is input-derived (positions ≥ ~1M ⇒ lead), overridable
     // via spark.graft.sa.walkLeadMinPositions for tests/deployments; at
     // the 100 TB target the lead form is always selected.
-    val leadThreshold = docs.sparkSession.conf
-      .getOption("spark.graft.sa.walkLeadMinPositions")
-      .map(_.toLong).getOrElse(1L << 20)
+    val leadThreshold = GraftConf.get(docs.sparkSession,
+      "spark.graft.sa.walkLeadMinPositions")(_.toLong).getOrElse(1L << 20)
     val useLead = ranked.positions >= leadThreshold
     val walked = ranked.levels.zipWithIndex
       .filter { case (_, j) => (1L << (2 * j)) <= math.max(ranked.maxLen, 1L) }

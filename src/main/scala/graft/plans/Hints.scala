@@ -4,6 +4,8 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{broadcast, call_function, expr, lit, pmod, xxhash64}
 
+import graft.GraftConf
+
 /** Join-hint policy. An explicit `broadcast()` hint is honored by Spark
   * unconditionally — no threshold check, no AQE demotion — so a forced hint
   * on a scale-factor-sized side is a driver-OOM at 100 TB, not a speedup.
@@ -25,12 +27,12 @@ object Hints {
   val ThresholdConf = "spark.graft.broadcastThreshold"
 
   private def thresholdBytes(df: DataFrame): Long = {
-    val conf = df.sparkSession.conf
-    val raw = conf.getOption(ThresholdConf)
-      .orElse(conf.getOption("spark.sql.autoBroadcastJoinThreshold"))
-      .getOrElse("10MB")
-      .trim
-    if (raw.startsWith("-")) 0L else JavaUtils.byteStringAsBytes(raw)
+    def bytes(raw: String): Long =
+      if (raw.startsWith("-")) 0L else JavaUtils.byteStringAsBytes(raw)
+    def read(key: String) = GraftConf.get(df.sparkSession, key)(bytes)
+    read(ThresholdConf)
+      .orElse(read("spark.sql.autoBroadcastJoinThreshold"))
+      .getOrElse(bytes("10MB"))
   }
 
   /** Advisory broadcast: hint only while the optimizer's size estimate for

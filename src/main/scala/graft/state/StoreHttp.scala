@@ -67,14 +67,14 @@ final class StoreHttp(
     case c => c.toString
   } + "\""
 
-  import StoreHttp.NotFound
+  import StoreHttp.Refused
 
   private def handle(ex: HttpExchange): Unit = {
     val resp =
       try route(ex)
       catch {
-        case NotFound(m)  => (404, s"""{"error":${jstr(m)}}""")
-        case e: Throwable => (500, s"""{"error":${jstr(e.getMessage)}}""")
+        case Refused(c, m) => (c, s"""{"error":${jstr(m)}}""")
+        case e: Throwable  => (500, s"""{"error":${jstr(e.getMessage)}}""")
       }
     val bytes = resp._2.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -87,12 +87,14 @@ final class StoreHttp(
     val parts = ex.getRequestURI.getPath.stripPrefix("/").split("/").toList
     val limit = Option(ex.getRequestURI.getQuery)
       .flatMap(_.split("&").collectFirst {
-        case q if q.startsWith("limit=") => q.stripPrefix("limit=").toInt
+        case q if q.startsWith("limit=") =>
+          val v = q.stripPrefix("limit=")
+          v.toIntOption.getOrElse(throw Refused(400, s"limit must be an integer, got '$v'"))
       }).getOrElse(1000)
       .max(0).min(maxScanLimit)
     def storeOr404(s: String): DataFrame =
       if (registry.storeNames.contains(s)) registry.store(s)
-      else throw NotFound(s"unknown store $s")
+      else throw Refused(404, s"unknown store $s")
     parts match {
       case "meta" :: Nil =>
         // host-metadata discovery (`kstream/store/meta.go:10-81`): the
@@ -125,7 +127,7 @@ final class StoreHttp(
           .cast(df.schema(registry.keyOf(s)).dataType))))
       case "stores" :: s :: "indexes" :: i :: key :: Nil =>
         val df = storeOr404(s)
-        val expr = indexes.getOrElse((s, i), throw NotFound(s"unknown index $i"))
+        val expr = indexes.getOrElse((s, i), throw Refused(404, s"unknown index $i"))
         (200, rows(df.filter(expr.cast("string") === key).limit(limit)))
       case _ => (404, """{"error":"not found"}""")
     }
@@ -136,6 +138,7 @@ final class StoreHttp(
 }
 
 object StoreHttp {
-  /** Unknown store/index → 404; anything else is an internal failure. */
-  private final case class NotFound(msg: String) extends RuntimeException(msg)
+  /** Unknown store/index → 404, malformed `?limit=` → 400; anything else
+    * is an internal failure (500). */
+  private final case class Refused(status: Int, msg: String) extends RuntimeException(msg)
 }

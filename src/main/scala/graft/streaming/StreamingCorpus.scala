@@ -36,8 +36,8 @@ import graft.state.Artifacts
   * work: the pre-round-11 forms shuffled every arriving row of the
   * batch to ONE `flatMapGroupsWithState` group and materialized it with
   * `.toSeq` — a single-task memory/throughput funnel at exactly the
-  * continuous-ingest regime they were built for. ProbeLedgerTwins
-  * measures the two shapes against each other.)
+  * continuous-ingest regime they were built for. The ledger-probe rows
+  * of BENCH_DENSITY.json measure the two shapes against each other.)
   */
 object StreamingCorpus {
 

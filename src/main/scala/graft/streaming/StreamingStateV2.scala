@@ -6,14 +6,12 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** The `transformWithState` forms of the state subsystem — Spark 4's
-  * arbitrary-stateful API (typed per-key state variables with native TTL,
-  * timers, RocksDB-backed). These carry the same semantics as the
-  * `mapGroupsWithState` forms in [[StreamingState]] and exist as the
-  * forward path: state TTL is enforced by the store itself (the exact
-  * analog of the reference's per-record expiry swept inside the backend,
-  * /root/reference/backend/memory/memory.go:52-180) instead of by
-  * per-key timeout callbacks, and state layout is declared rather than
-  * encoded in one opaque blob.
+  * arbitrary-stateful API (typed per-key state variables, timers,
+  * `MapState`). Only the operators that need that API live here:
+  * [[snapshotEvery]] (processing-time timers) and [[asOfEnrich]]
+  * (per-key version history in `MapState`). Latest-by-key and the
+  * version-gated upsert have one implementation each, in
+  * [[StreamingState]].
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass` =
@@ -21,60 +19,6 @@ import org.apache.spark.sql.streaming._
   * 100 TB deployment runs anyway for changelog-checkpointed state.
   */
 object StreamingStateV2 {
-
-  /** A1 latest-by-key (GlobalTable sync, kstream/global_table.go:31-60)
-    * with optional store-enforced TTL. Tombstone (null value) deletes the
-    * key and re-emits so downstream stores delete too; a TTL-expired key
-    * simply vanishes from state (the reference's sweeper behavior —
-    * deletion without emission, backend/memory/memory.go:104-117).
-    */
-  private final class LatestByKeyProcessor(ttl: Option[Duration])
-      extends StatefulProcessor[String, KRecord, KRecord] {
-    @transient private var latest: ValueState[KRecord] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      latest = getHandle.getValueState[KRecord]("latest", Encoders.product[KRecord], cfg)
-    }
-
-    override def handleInputRows(
-        key: String, rows: Iterator[KRecord], tv: TimerValues): Iterator[KRecord] = {
-      val incoming = rows.maxBy(_.ord)
-      val winner =
-        if (latest.exists() && latest.get().ord >= incoming.ord) latest.get()
-        else incoming
-      if (winner.value == null) {
-        latest.clear()
-        Iterator.single(KRecord(key, winner.ord, null, winner.version))
-      } else {
-        latest.update(winner)
-        Iterator.single(winner)
-      }
-    }
-  }
-
-  /** A2 version-gated upsert (global_table_stream_instance.go:236-268,
-    * strict `>`; ties keep the stored record) on typed state.
-    */
-  private final class VersionedUpsertProcessor
-      extends StatefulProcessor[String, KRecord, KRecord] {
-    @transient private var current: ValueState[KRecord] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      current = getHandle.getValueState[KRecord](
-        "current", Encoders.product[KRecord], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[KRecord], tv: TimerValues): Iterator[KRecord] = {
-      val start = if (current.exists()) Some(current.get()) else None
-      val winner = rows.toSeq.sortBy(_.ord).foldLeft(start) {
-        case (Some(cur), r) if r.version <= cur.version => Some(cur)
-        case (_, r)                                     => Some(r)
-      }.get
-      current.update(winner)
-      Iterator.single(winner)
-    }
-  }
 
   /** Output of [[snapshotEvery]]: a timer-driven per-key snapshot.
     * `updatesSinceLast` is the number of records folded into the key
@@ -220,21 +164,5 @@ object StreamingStateV2 {
     ds.groupByKey(_.key)
       .transformWithState(
         new AsOfEnrichProcessor(retainVersions), TimeMode.None(), OutputMode.Append())
-  }
-
-  def latestByKey(ds: Dataset[KRecord], ttl: Option[Duration] = None): Dataset[KRecord] = {
-    import ds.sparkSession.implicits._
-    // state TTL is clocked by processing time; without one, no clock needed
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new LatestByKeyProcessor(ttl), timeMode, OutputMode.Update())
-  }
-
-  def versionedUpsert(ds: Dataset[KRecord]): Dataset[KRecord] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new VersionedUpsertProcessor, TimeMode.None(), OutputMode.Update())
   }
 }

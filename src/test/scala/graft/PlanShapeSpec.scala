@@ -401,6 +401,16 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.unset(Hints.ThresholdConf)
   }
 
+  test("a malformed spark.graft.broadcastThreshold fails naming the key") {
+    import graft.plans.Hints
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+    spark.conf.set(Hints.ThresholdConf, "ten megs")
+    try {
+      val e = intercept[IllegalArgumentException](Hints.broadcastIfSmall(nation))
+      assert(e.getMessage.contains(s"${Hints.ThresholdConf}: 'ten megs'"))
+    } finally spark.conf.unset(Hints.ThresholdConf)
+  }
+
   test("pack: greedy scan is one per-doc agg + explode — no window, no join") {
     val df = q("q_pack")
     assert(countNodes(df, "Window") === 0)

@@ -87,6 +87,13 @@ class StoreHttpSpec extends SparkSpec {
       assert(count("/stores/big") === 5)       // default 1000 clamps too
       assert(count("/stores/big?limit=3") === 3) // under the cap passes through
       assert(count("/stores/big?limit=-7") === 0)
+      // outside input: a non-integer limit is the caller's error (400), not 500
+      val r = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/stores/big?limit=abc"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() === 400)
+      assert(r.body() === """{"error":"limit must be an integer, got 'abc'"}""")
     } finally http.stop()
   }
 

@@ -69,6 +69,32 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("latestByKeyWithTTL expiry: tombstone, then a stale ord wins") {
+    val mem = MemoryStream[KRecord]
+    val name = sinkName()
+    val q = StreamingState.latestByKeyWithTTL(mem.toDS(), java.time.Duration.ofMillis(300))
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Update())
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    try {
+      def emitted = spark.table(name).as[KRecord].collect().map(r => r.ord -> r.value).toSet
+      def await(want: (Long, String)): Unit = {
+        val deadline = System.currentTimeMillis() + 60000
+        while (!emitted.contains(want) && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+        assert(emitted.contains(want), s"expected $want in $emitted")
+      }
+      mem.addData(KRecord("a", 5, "v5"))
+      await(5L -> "v5")
+      // idle past the TTL: the timeout evicts the key and emits a tombstone
+      await(5L -> null)
+      // stale ord would lose to live state; it wins ⇒ state expired
+      mem.addData(KRecord("a", 1, "v1"))
+      await(1L -> "v1")
+    } finally q.stop()
+  }
+
   test("versionedUpsert: strict > comparator, ties keep first-seen (A2 streaming)") {
     val mem = MemoryStream[KRecord]
     val name = runBatches(mem, StreamingState.versionedUpsert(mem.toDS()), OutputMode.Update())(

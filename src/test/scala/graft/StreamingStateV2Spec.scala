@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{KRecord, StreamingStateV2}
+import graft.streaming.StreamingStateV2
 
 /** The transformWithState (Spark 4 arbitrary-state API) forms, run on the
-  * RocksDB state store provider they require — semantics must match the
-  * mapGroupsWithState forms in StreamingSpec.
+  * RocksDB state store provider they require.
   */
 class StreamingStateV2Spec extends SparkSpec {
   import spark.implicits._
@@ -24,61 +23,6 @@ class StreamingStateV2Spec extends SparkSpec {
     finally prev match {
       case Some(v) => spark.conf.set(providerKey, v)
       case None    => spark.conf.unset(providerKey)
-    }
-  }
-
-  private var nextSink = 0
-  private def run(
-      mem: MemoryStream[KRecord], out: org.apache.spark.sql.Dataset[KRecord])(
-      batches: Seq[KRecord]*): String = withRocks {
-    nextSink += 1
-    val name = s"graft_tws_$nextSink"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Update()).start()
-    try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    finally q.stop()
-    name
-  }
-
-  test("transformWithState latestByKey: newest wins, tombstone deletes") {
-    val mem = MemoryStream[KRecord]
-    val name = run(mem, StreamingStateV2.latestByKey(mem.toDS()))(
-      Seq(KRecord("a", 1, "a1"), KRecord("b", 1, "b1")),
-      Seq(KRecord("a", 2, "a2"), KRecord("a", 0, "stale")),
-      Seq(KRecord("b", 9, null))
-    )
-    val last = spark.table(name).as[KRecord].collect()
-      .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.ord) }
-    assert(last("a").value === "a2")
-    assert(last("b").value === null)
-  }
-
-  test("transformWithState latestByKey honors store-enforced TTL") {
-    // ProcessingTime mode runs no-data batches continuously, so
-    // processAllAvailable never quiesces — poll the sink with a deadline
-    // (same gotcha as ProcessingTimeTimeout, see StreamingSpec).
-    val mem = MemoryStream[KRecord]
-    withRocks {
-      val q = StreamingStateV2.latestByKey(mem.toDS(),
-          ttl = Some(java.time.Duration.ofMillis(300)))
-        .writeStream.format("memory").queryName("graft_tws_ttl")
-        .outputMode(OutputMode.Update()).start()
-      try {
-        def values = spark.table("graft_tws_ttl").as[KRecord].collect()
-          .sortBy(_.ord).map(_.value).toSeq
-        mem.addData(KRecord("a", 5, "v5"))
-        val d1 = System.currentTimeMillis() + 60000
-        while (values != Seq("v5") && System.currentTimeMillis() < d1)
-          Thread.sleep(100)
-        assert(values === Seq("v5"))
-        Thread.sleep(1500) // let the state's TTL lapse
-        // stale ord would lose to live state; it wins ⇒ state expired
-        mem.addData(KRecord("a", 1, "v1"))
-        val d2 = System.currentTimeMillis() + 60000
-        while (values != Seq("v1", "v5") && System.currentTimeMillis() < d2)
-          Thread.sleep(100)
-        assert(values === Seq("v1", "v5"))
-      } finally q.stop()
     }
   }
 
@@ -217,16 +161,5 @@ class StreamingStateV2Spec extends SparkSpec {
     }
     val out = spark.read.parquet(s"$dir/out").as[AsOfMatch].collect()
     assert(out.map(m => m.ts -> m.asOf).toMap === Map(15L -> Some("v10")))
-  }
-
-  test("transformWithState versionedUpsert: strict >, ties keep first-seen") {
-    val mem = MemoryStream[KRecord]
-    val name = run(mem, StreamingStateV2.versionedUpsert(mem.toDS()))(
-      Seq(KRecord("k", 1, "v1", version = 5)),
-      Seq(KRecord("k", 2, "same-version", version = 5)), // tie ⇒ keeps v1
-      Seq(KRecord("k", 3, "v2", version = 6))
-    )
-    val rows = spark.table(name).as[KRecord].collect().sortBy(_.ord)
-    assert(rows.map(_.value).toSeq === Seq("v1", "v1", "v2"))
   }
 }

@@ -127,6 +127,17 @@ class SuffixArraySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.sa.walkLeadMinPositions")
   }
 
+  test("a malformed spark.graft.sa.walkLeadMinPositions fails naming the key") {
+    spark.conf.set("spark.graft.sa.walkLeadMinPositions", "1M")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        SuffixArray.repeatedSpans(Seq((1L, "a b a b")).toDF("doc_id", "text"),
+          "doc_id", "text", minLen = 1)
+      }
+      assert(e.getMessage.contains("spark.graft.sa.walkLeadMinPositions: '1M'"))
+    } finally spark.conf.unset("spark.graft.sa.walkLeadMinPositions")
+  }
+
   test("equal whole docs: every suffix pair ties and spans cap at suffix length") {
     val corpus = Seq((1L, "x y z x y"), (2L, "x y z x y"), (3L, "z x q"))
     val spans = SuffixArray.repeatedSpans(corpus.toDF("doc_id", "text"),
