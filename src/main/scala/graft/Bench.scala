@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.Materialize
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,12 +19,11 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // per-query isolation: drop cached frames and localCheckpoint blocks
+      // per-query isolation: drop cached frames and materializations
       // before the next query — 200+ plans through one JVM otherwise pile
       // blocks up in the block manager until GC, and one contended run can
       // overstate a query by >10x (BENCH_r03 recorded 57 s for a 3 s query)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      Materialize.releaseAll(spark)
       sec
     }
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (profiling aid)
@@ -51,9 +52,7 @@ object Bench {
         try {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
+          Materialize.releaseAll(spark)
           Some(n -> (System.nanoTime() - t0) / 1e9)
         } catch {
           case e: Throwable =>

@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the command-line mains (Bench, Verify,
   * ScaleCheck, Explain, EntrySmoke): `local[SPARK_GRAFT_CPUS]` (default:
   * the JVM's available processors), shuffle partitions from
   * `SPARK_GRAFT_SHUFFLE` (default: one per core), UI off, UTC, log level
-  * WARN. Any other setting rides in as a `-Dspark.*` system property,
-  * which the builder picks up like every Spark conf.
+  * WARN (ERROR for the logger of the release warning). Any other setting
+  * rides in as a `-Dspark.*` system property, which the builder picks up
+  * like every Spark conf.
   */
 object Session {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -26,6 +29,9 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // every Materialize.release logs "RDD N was locally checkpointed, its
+    // lineage has been truncated..." at WARN under this one logger
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Byte-pair-encoding tokenizer training (Sennrich et al. 2016, the
   * standard subword-vocabulary construction) — the tokenizer-training leg
   * of a pretraining pipeline, next to the vocabulary stats
@@ -76,7 +78,7 @@ object Bpe {
     var vocab: Dataset[(Seq[String], Long)] = wordFreq(docs, text, minFreq)
       .select(split(col("word"), "").as("sym"), col("f"))
       .as[(Seq[String], Long)]
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val out = Seq.newBuilder[Merge]
     var r = 0
     var exhausted = false
@@ -94,15 +96,15 @@ object Bpe {
       else {
         val (a, b, n) = top.head
         out += Merge(r, a, b, n)
-        val merged = vocab.map { case (sym, f) =>
+        val merged = Materialize(vocab.map { case (sym, f) =>
           (mergePair(sym, a, b), f)
-        }.localCheckpoint(true)
-        vocab.unpersist()
+        })
+        Materialize.release(vocab)
         vocab = merged
         r += 1
       }
     }
-    vocab.unpersist()
+    Materialize.release(vocab)
     out.result()
   }
 
@@ -155,7 +157,7 @@ object Bpe {
     var vocab: Dataset[(Seq[String], Long)] = wordFreq(docs, text, minFreq)
       .select(split(col("word"), "").as("sym"), col("f"))
       .as[(Seq[String], Long)]
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // driver-side alphabet: every symbol string currently in the vocab —
     // alphabet-sized (initial chars + one per merge), never data-sized
     var alphabet: Set[String] =
@@ -171,9 +173,10 @@ object Bpe {
         }
         .toDF("a", "b", "f")
         .groupBy("a", "b").agg(sum("f").as("n"))
-        .localCheckpoint(true) // one materialization feeds both reads
+        .transform(Materialize(_)) // one materialization feeds both reads
       val top = pairs.orderBy(col("n").desc, col("a"), col("b"))
         .limit(batchK).as[(String, String, Long)].collect()
+      Materialize.release(pairs)
       if (top.isEmpty) exhausted = true
       else {
         // every pair key NOT in `exact` has count ≤ unseenBound
@@ -275,18 +278,17 @@ object Bpe {
           out += Merge(done + i, a, b, n)
         }
         val ranked = batch.map(p => (p._1, p._2))
-        val next = vocab.map { case (sym, f) =>
+        val next = Materialize(vocab.map { case (sym, f) =>
           (ranked.foldLeft(sym) { case (s, (a, b)) => mergePair(s, a, b) }, f)
-        }.localCheckpoint(true)
-        vocab.unpersist()
-        pairs.unpersist()
+        })
+        Materialize.release(vocab)
         vocab = next
         alphabet ++= batch.map(p => p._1 + p._2)
         done += batch.size
         rounds += 1
       }
     }
-    vocab.unpersist()
+    Materialize.release(vocab)
     (out.result(), rounds)
   }
 

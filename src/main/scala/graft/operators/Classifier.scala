@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Hashed-linear document classifier — the model-based quality-filter leg
   * of a pretraining pipeline (the fastText-style filters behind CCNet /
   * DCLM / FineWeb-Edu style corpus curation), next to the heuristic gates
@@ -75,7 +77,7 @@ object Classifier {
       .select(labelCol.cast("long").as("_cls_y"), tokens(col(text)).as("_cls_toks"))
       .select(col("_cls_y"),
         transform(col("_cls_toks"), t => bucket(t, numBuckets)).as("_cls_b"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     try {
       var epoch = 0
       var converged = false
@@ -103,7 +105,7 @@ object Classifier {
           epoch += 1
         }
       }
-    } finally featured.unpersist()
+    } finally Materialize.release(featured)
     (w, bias)
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Corpus-preparation operators for training-data pipelines: context-window
   * chunking and deterministic sampling. Both are narrow per-row transforms
   * (chunking explodes rows but never shuffles; sampling is a filter), so
@@ -166,7 +168,7 @@ object Corpus {
     val perDocTok = docs.select(col(id).as("_doc"),
         explode(split(lower(col(text)), "\\s+")).as("tok"))
       .groupBy("_doc", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfTab = perDocTok.groupBy("tok").agg(count(lit(1)).as("df"))
     perDocTok.join(graft.plans.Hints.broadcastIfSmall(dfTab), "tok")
@@ -311,7 +313,7 @@ object Corpus {
     // explode + count ran twice
     val uni = toks.select(explode(tkc).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val bi = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("cnt_xy"))
       .filter(col("cnt_xy") >= minCount)
     val num = col("cnt_xy").cast("decimal(38,0)") * col("cnt_xy") * lit(1000000L)
@@ -754,7 +756,7 @@ object Corpus {
     // denseNumberCounted: a re-sampled range boundary set would misalign
     // every base offset
     val local = packByOrderLocal(ordered, pos, tokens, buckets)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val perPart = local.groupBy("_pbP").agg(sum(col("_pbT")).as("_pbTot"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
@@ -1204,7 +1206,7 @@ object Corpus {
       // consumed twice (the rc histogram AND the weight join) — without
       // the materialization the corpus-sized tokenize+gram+hash explode
       // runs twice
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val ratio = dsirRatioTableFromGrams(rawGrams, target, id, text, n, buckets, scale)
     val weights = rawGrams
       .join(graft.plans.Hints.broadcastIfSmall(ratio), "_b")
@@ -1425,7 +1427,7 @@ object Corpus {
       // arrivals-sized; materialized so the range numbering's sampling
       // pass re-reads a block instead of re-running the candidate join +
       // argmax agg (the denseNumber call-site audit, r14)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     SuffixArray.denseNumber(best, Seq(col("_iaK"), col("doc_id")), "_iaR", 32)
       .select(col("doc_id"), col("anchor"),
         (lit(basePos) + col("_iaR")).as("icp_pos"))

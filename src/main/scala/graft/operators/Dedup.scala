@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Document deduplication for training-data pipelines, at 100 TB design
   * scale. Flavors:
   *
@@ -139,7 +141,7 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // The element sets are the corpus's heaviest column; they exist ONLY
     // in narrow projections below candidate reduction. Round 4's 100x
-    // sweep caught both wrong forms: localCheckpointing corpus-sized
+    // sweep caught both wrong forms: materializing corpus-sized
     // (doc, elems) thrashes the block manager past storage memory, and
     // joining the full corpus with its arrays makes the attach SMJ sort
     // 100x-sized array rows (10x run-to-run swings from allocation/GC
@@ -151,7 +153,7 @@ object Dedup {
     // (doc, numHashes longs) table once instead of recomputing the
     // tokenize+hash+aggregate pipeline per side. At extreme corpus sizes
     // swap for a persisted signature table on storage.
-    val sigs = minHashSignatures(docs, id, setCol, numHashes).localCheckpoint(true)
+    val sigs = Materialize(minHashSignatures(docs, id, setCol, numHashes))
     val keyed = bandKeyed(sigs, numHashes, bands)
     // pairs of longs, bounded by LSH design — the one frame here whose
     // materialization is cheap AND load-bearing: three consumers (the id
@@ -163,7 +165,7 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
       .dropDuplicates("a_id", "b_id")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val candIds = cand.select(col("a_id").as(id))
       .union(cand.select(col("b_id").as(id))).distinct()
     // semi-join the RAW docs on ids, and only then project the element
@@ -174,7 +176,7 @@ object Dedup {
     // array build all run twice, once per side.
     val candBase = docs.join(candIds, Seq(id), "left_semi")
       .select(col(id).as("doc"), setCol.as("elems"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     cand
       .join(candBase.select(col("doc").as("a_id"), col("elems").as("a_set")), Seq("a_id"))
       .join(candBase.select(col("doc").as("b_id"), col("elems").as("b_set")), Seq("b_id"))
@@ -237,7 +239,7 @@ object Dedup {
         Seq("band", "bucket"))
       .select("new_id", "old_id")
       .dropDuplicates("new_id", "old_id")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // attach sets candidate-side only, each frame semi-joined to its ids
     // BELOW the array projection (the candidatePairs scale rule)
     def sets(df: DataFrame, pairCol: String, outSet: String) =
@@ -303,7 +305,7 @@ object Dedup {
       .agg(call_function("capped_collect", col("_ctDoc"), lit(maxDf)).as("_ctDocs"))
       .filter(col("_ctDocs").isNotNull)
       .select("_ctDocs")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val sz = buckets.select(explode(col("_ctDocs")).as("src_id"))
       .groupBy("src_id").agg(count(lit(1)).as("n_src"))
     buckets.select(explode(col("_ctDocs")).as("src_id"), col("_ctDocs"))
@@ -354,7 +356,7 @@ object Dedup {
     val inv = exO.groupBy("_ctG")
       .agg(count(lit(1)).as("_ctDf"),
         call_function("capped_collect", col("_ctDoc"), lit(maxDf)).as("_ctOld"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // new-side grams keep corpus-unseen ones (df 0): left join + coalesce;
     // the bucket join is batch-sized — corpus rows never shuffle again
     val keptN = newDocs.select(col(id).as("new_id"),
@@ -363,7 +365,7 @@ object Dedup {
       .join(inv, Seq("_ctG"), "left")
       .filter(coalesce(col("_ctDf"), lit(0L)) <= maxDf)
       .select(col("new_id"), coalesce(col("_ctOld"), array().cast("array<bigint>")).as("_ctOld"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val sz = keptN.groupBy("new_id").agg(count(lit(1)).as("n_src"))
     keptN.select(col("new_id"), explode(col("_ctOld")).as("old_id"))
       .groupBy("new_id", "old_id").agg(count(lit(1)).as("n_common"))
@@ -491,13 +493,13 @@ object Dedup {
     val sym = edges
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .localCheckpoint(true) // reused every round; keep the scan out of the loop
+      .transform(Materialize(_)) // reused every round; keep the scan out of the loop
     // seed with min(self, direct neighbors): near-dup clusters are
     // near-cliques, so most components converge at initialization and the
     // loop only runs the confirming round (plus extras for chains)
     var labels = sym.groupBy(col("a").as("node"))
       .agg(least(min(col("b")), first(col("a"))).as("label"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var changed = 1L
     var iters = 0
     while (changed > 0 && iters < maxIters) {
@@ -505,9 +507,10 @@ object Dedup {
         .select(sym("a").as("node"), col("label"))
       val next = labels.unionByName(viaNeighbor)
         .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       changed = next.join(labels.withColumnRenamed("label", "prev"), Seq("node"))
         .filter(col("label") =!= col("prev")).count()
+      Materialize.release(labels)
       labels = next
       iters += 1
     }
@@ -561,14 +564,14 @@ object Dedup {
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("a"), least(col("x"), col("y")).as("b"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var stable = false
     var iters = 0
     var prevCount = edges.count()
     while (!stable && iters < maxIters) {
       // checkpoint per round: the loop would otherwise stack an
       // exponentially deep plan (each round references the last twice)
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+      val next = Materialize(smallStar(largeStar(edges)))
       // convergence = set equality, probed in two tiers: a round that
       // changed the (distinct, non-increasing) edge COUNT is certainly
       // not stable — one narrow count over the checkpointed frame settles
@@ -585,6 +588,7 @@ object Dedup {
       val nextCount = next.count()
       stable = nextCount == prevCount &&
         next.join(edges, Seq("a", "b"), "left_anti").isEmpty
+      Materialize.release(edges)
       edges = next
       prevCount = nextCount
       iters += 1
@@ -713,7 +717,7 @@ object Dedup {
     val mask = if (blockBits == 64) -1L else (1L << blockBits) - 1
     val sigs = sigs0
       .select(col(id).cast("long").as("doc_id"), col(sig).as("sig"))
-      .localCheckpoint(true) // both self-join sides read the signatures
+      .transform(Materialize(_)) // both self-join sides read the signatures
     val banded = sigs.select(col("doc_id"), col("sig"),
       posexplode(array((0 until bands).map(b =>
         shiftright(col("sig"), b * blockBits).bitwiseAND(lit(mask))): _*)))
@@ -1023,7 +1027,7 @@ object Dedup {
     val names = df.select(col(key).cast("string").as("name"))
       .filter(col("name").isNotNull).distinct()
       .withColumn("len", length(col("name")))
-      .localCheckpoint(true) // consumed by the gram path + the short pool
+      .transform(Materialize(_)) // consumed by the gram path + the short pool
     // positional q-gram instances
     val bag = names
       .select(col("name"), col("len"),
@@ -1038,7 +1042,7 @@ object Dedup {
       .filter(col("r") <= prefixLen)
       .select(col("g"), col("pos"),
         portableHash64(col("name")).as("hid"), col("len"))
-      .localCheckpoint(true) // both sides of the candidate self-join
+      .transform(Materialize(_)) // both sides of the candidate self-join
     // banded candidate join: probe side replicated to its band ± 1, so a
     // matching instance pair (|Δpos| ≤ k) lands in exactly one band key
     val probe = pref.select(col("g"), explode(array(
@@ -1131,10 +1135,10 @@ object Dedup {
     // materialized once: four consumers (sizes, df inventory, prefix
     // index, verify arrays) would otherwise each re-run the explode +
     // distinct shuffle
-    val ex = hashedGrams(docs, id, text, shingleN).localCheckpoint(true)
+    val ex = Materialize(hashedGrams(docs, id, text, shingleN))
     val gdf = ex.groupBy("_jpG").agg(count(lit(1)).as("_jpDf"))
     val pref = prefixRanked(ex, gdf, minNum, minDen)
-      .localCheckpoint(true) // both sides of the candidate self-join
+      .transform(Materialize(_)) // both sides of the candidate self-join
     jaccardSelfJoinVerify(pref, fingerprintSets(ex), minNum, minDen)
   }
 
@@ -1218,8 +1222,8 @@ object Dedup {
     * corpus twice, once per operator. All four artifacts are what a
     * production pipeline persists per corpus release anyway (gram frame,
     * df inventory, prefix index, fingerprint arrays); here they ride
-    * eager localCheckpoints so each is computed exactly once however
-    * many consumers read it. Build via [[jaccardIndex]].
+    * [[graft.plans.Materialize]] checkpoints so each is computed exactly
+    * once however many consumers read it. Build via [[jaccardIndex]].
     */
   final case class JaccardIndex private[operators] (
       grams: DataFrame, gdf: DataFrame, pref: DataFrame, sets: DataFrame,
@@ -1229,13 +1233,13 @@ object Dedup {
       shingleN: Int, minNum: Int, minDen: Int): JaccardIndex = {
     require(minNum >= 1 && minDen >= minNum,
       s"need 0 < minNum/minDen <= 1, got $minNum/$minDen")
-    val ex = hashedGrams(docs, id, text, shingleN).localCheckpoint(true)
+    val ex = Materialize(hashedGrams(docs, id, text, shingleN))
     val gdf = ex.groupBy("_jpG").agg(count(lit(1)).as("_jpDf"))
-      .localCheckpoint(true) // consumed by pref here + the arrivals' prefix
+      .transform(Materialize(_)) // consumed by pref here + the arrivals' prefix
     val pref = prefixRanked(ex, gdf, minNum, minDen)
-      .localCheckpoint(true) // self-join sides + the against candidate join
+      .transform(Materialize(_)) // self-join sides + the against candidate join
     val sets = fingerprintSets(ex)
-      .localCheckpoint(true) // self verify (×2) + against verify
+      .transform(Materialize(_)) // self verify (×2) + against verify
     JaccardIndex(ex, gdf, pref, sets, minNum, minDen)
   }
 
@@ -1299,7 +1303,7 @@ object Dedup {
         explode(shingles(col(text), shingleN)).as("_jpG0"))
       .select(col("_jpD"), portableHash64(col("_jpG0")).as("_jpG"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val exO = grams(corpus)
     val exN = grams(newDocs)
     val gdf = exO.groupBy("_jpG").agg(count(lit(1)).as("_jpDf"))
@@ -1354,7 +1358,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val minNum = index.minNum
     val minDen = index.minDen
-    val exN = hashedGrams(newDocs, id, text, shingleN).localCheckpoint(true)
+    val exN = Materialize(hashedGrams(newDocs, id, text, shingleN))
     val byDoc = Window.partitionBy("_jpD")
     val prefN = exN.join(index.gdf, Seq("_jpG"), "left")
       .withColumn("_jpDfz", coalesce(col("_jpDf"), lit(0L)))
@@ -1406,7 +1410,7 @@ object Dedup {
     val names = df.select(col(key).cast("string").as("name"))
       .filter(col("name").isNotNull).distinct()
       .withColumn("_feH", portableHash64(col("name")))
-      .localCheckpoint(true) // pairs derive from it; labeling joins back
+      .transform(Materialize(_)) // pairs derive from it; labeling joins back
     val pairs = fuzzyKeyPairs(names, "name", maxDist, q)
     val comp = resolveComponentsStar(
       pairs.select(portableHash64(col("name_a")).as("a_id"),
@@ -1508,7 +1512,7 @@ object Dedup {
     val exM = docs.select(col(id).cast("long").as("doc"),
         explode(shingles(col(text), shingleN)).as("_lrG0"))
       .select(col("doc"), md5(col("_lrG0")).as("_lrM"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val ex = exM
       .select(col("doc"),
         (conv(substring(col("_lrM"), 1, 15), 16, 10).cast("long") % m)
@@ -1536,9 +1540,9 @@ object Dedup {
     val exH = exM.select(col("doc").as("_jpD"),
         conv(substring(col("_lrM"), 1, 15), 16, 10).cast("long").as("_jpG"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val gdf = exH.groupBy("_jpG").agg(count(lit(1)).as("_jpDf"))
-    val pref = prefixRanked(exH, gdf, minNum, minDen).localCheckpoint(true)
+    val pref = Materialize(prefixRanked(exH, gdf, minNum, minDen))
     val truth = jaccardSelfJoinVerify(pref, fingerprintSets(exH),
         minNum, minDen)
       .select("id_a", "id_b")

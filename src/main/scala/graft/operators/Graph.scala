@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Link-graph analytics over an edge list.
   *
   * The reference engine (tryfix/kstream) has no graph operator; this
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   * pages by incoming-link authority, keep the head). The iterative shape
   * reuses the engine's established patterns: per-round node-sized
   * frames against a pre-partitioned edge list, constant-depth lineage
-  * via localCheckpoint (same discipline as
+  * via [[graft.plans.Materialize]] (same discipline as
   * [[Similarity.kMeansCentroids]] and [[Dedup.resolveComponentsStar]]).
   */
 object Graph {
@@ -144,12 +146,11 @@ object Graph {
     require(scale > 0, s"need scale > 0, got $scale")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    // ONE edge checkpoint serves both half-round join sides (r13): a
-    // localCheckpoint's LogicalRDD reports UnknownPartitioning on this
-    // Spark (plan-verified), so pre-partitioned per-side copies bought
-    // nothing — every half-round join re-exchanges the cached rows
-    // either way, and the second materialization was pure cost
-    val eCk = e.localCheckpoint(true)
+    // ONE edge checkpoint serves both half-round join sides (r13):
+    // pre-partitioned per-side copies bought nothing — every half-round
+    // join re-exchanges the cached rows either way, and the second
+    // materialization was pure cost
+    val eCk = Materialize(e)
     // exact ⌊(raw·scale)/mx⌋: strip the remainder so the decimal divide is
     // of an exact multiple (the Corpus.ceilDivExact trick, floor flavor)
     def norm(raw: Column, mx: Column): Column = {
@@ -163,14 +164,17 @@ object Graph {
       val mx = raw.agg(max(col("_hRaw")).as("_hMx"))
       raw.crossJoin(broadcast(mx))
         .select(col("node"), norm(col("_hRaw"), col("_hMx")).as("score"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     }
     val hubs0 = eCk.select(col("src").as("node")).distinct()
       .select(col("node"), lit(scale).as("score"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val (auths, hubs) = (1 to iters).foldLeft((hubs0, hubs0)) {
-      case ((_, h), _) =>
+      case ((prevA, h), _) =>
         val a = halfRound(h, "src", "dst")
+        // the previous round's pair is superseded once `a` is stored
+        if (prevA ne h) Materialize.release(prevA)
+        Materialize.release(h)
         (a, halfRound(a, "dst", "src"))
     }
     auths.withColumn("role", lit("auth"))
@@ -212,23 +216,22 @@ object Graph {
     // un-materialized edge subtree (r13, guide §1.2-1)
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // no pre-partitioning before the checkpoint (r13): the per-round
-    // join re-exchanges the cached rows regardless (UnknownPartitioning
-    // from the checkpoint), so the repartition was a pure extra exchange
+    // join re-exchanges the cached rows regardless, so the repartition
+    // was a pure extra exchange
     val eplus = e
       .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val regs0 = graft.functions.Sketches.hllRegisters(
       nodes, col("node").cast("string"), p, strata = Seq("node"))
-    val regs = (1 to radius).foldLeft(regs0.localCheckpoint(true)) { (r, _) =>
+    val regs = Materialize.rounds(regs0, radius) { (r, _) =>
       eplus.join(r.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"), col("bucket"))
         .agg(max("rho").as("rho"))
-        .localCheckpoint(true)
     }
     graft.functions.Sketches.hllEstimate(regs, p, strata = Seq("node"))
   }
@@ -265,17 +268,17 @@ object Graph {
       .select(least(col("_s"), col("_d")).as("u"),
         greatest(col("_s"), col("_d")).as("v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val lower = struct(col("_du"), col("u")) < struct(col("_dv"), col("v"))
     val o = und
       .join(deg.select(col("n").as("u"), col("d").as("_du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("d").as("_dv")), Seq("v"))
       .select(when(lower, col("u")).otherwise(col("v")).as("a"),
         when(lower, col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint(true) // three consumers: two wedge sides + closure
+      .transform(Materialize(_)) // three consumers: two wedge sides + closure
     val wedges = o.select(col("a"), col("b").as("p"))
       .join(o.select(col("a"), col("b").as("q")), Seq("a"))
       .filter(col("p") < col("q"))
@@ -317,16 +320,15 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
-    // no pre-partitioning before the checkpoints (r13, as in rankLoop):
-    // checkpoint partitioning is not visible downstream on this Spark
+    // no pre-partitioning before the checkpoints (r13, as in rankLoop)
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize(_))
     val l0 = nodes.select(col("node"), col("node").as("lbl"))
-    (1 to rounds).foldLeft(l0.localCheckpoint(true)) { (labels, _) =>
+    Materialize.rounds(l0, rounds) { (labels, _) =>
       val votes = e.join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("_lpC"))
       val next = votes.groupBy("dst")
@@ -334,7 +336,6 @@ object Graph {
         .select(col("dst").as("node"), (-col("_lpM.nl")).as("_lpNew"))
       labels.join(next, Seq("node"), "left")
         .select(col("node"), coalesce(col("_lpNew"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
     }
   }
 
@@ -363,17 +364,15 @@ object Graph {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val d0 = seeds.select(col("node").cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    (1 to rounds).foldLeft(d0) { (dist, r) =>
+    Materialize.rounds(d0, rounds) { (dist, r) =>
       val frontier = dist.filter(col("dist") === lit(r - 1).cast("long"))
       val cand = e.join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), lit(r.toLong).as("dist"))
       dist.union(cand)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
     }
   }
 
@@ -400,14 +399,13 @@ object Graph {
     require(k >= 1 && rounds >= 0, s"need k >= 1 and rounds >= 0, got $k, $rounds")
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .distinct().localCheckpoint(true)
-    val peeled = (1 to rounds).foldLeft(e0) { (e, _) =>
+      .distinct()
+    val peeled = Materialize.rounds(e0, rounds) { (e, _) =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("_kcD"))
         .filter(col("_kcD") >= k).select("src")
       e.join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
         .select("src", "dst")
-        .localCheckpoint(true)
     }
     peeled.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("long").as("deg"))
@@ -431,9 +429,8 @@ object Graph {
       col("dst").cast("long").as("dst"))
     // out-degrees ride along with every edge so the per-round join is
     // rank-to-edge only. Checkpointed, and measured-preferred over
-    // persist() (r13): a localCheckpoint's LogicalRDD reports
-    // UnknownPartitioning on this Spark (plan-verified), so each round
-    // DOES re-exchange the cached edge rows — but the persist()
+    // persist() (r13): each round DOES re-exchange the checkpointed edge
+    // rows — but the persist()
     // alternative, whose InMemoryRelation would keep the hash(src)
     // partitioning and skip those exchanges, measured WORSE
     // (q_pagerank/q_ppr/q_hits/q_neighborhood batch 21.7 → 27.1 s at
@@ -441,7 +438,7 @@ object Graph {
     // more than the saved exchanges). Raw checkpoint blocks re-shuffle
     // cheaper than a columnar cache reads.
     val eOut = e.join(e.groupBy("src").agg(count(lit(1)).as("_prD")), "src")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // warm-start mode widens the universe with standing nodes (a page
     // ranked in an earlier refresh stays ranked even if the current edge
     // slice never mentions it). Nodes derive from the CHECKPOINTED eOut
@@ -465,7 +462,7 @@ object Graph {
             .distinct(),
           Seq("node"), "full_outer")
         .select(col("node"), coalesce(col("_prT"), lit(false)).as("_prT"))
-    }.localCheckpoint(true)
+    }.transform(Materialize(_))
     val base = scale * (dampDen - dampNum) / dampDen
     val baseCol = when(col("_prT"), lit(base)).otherwise(lit(0L))
     val coldR0 = when(col("_prT"), lit(scale)).otherwise(lit(0L))
@@ -477,7 +474,7 @@ object Graph {
           Seq("node"), "left")
         .select(col("node"), coalesce(col("_prR0"), coldR0).as("pr_rank"))
     }
-    (1 to iters).foldLeft(r0.localCheckpoint(true)) { (ranks, _) =>
+    Materialize.rounds(r0, iters) { (ranks, _) =>
       val contribs = eOut
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst"),
@@ -486,7 +483,6 @@ object Graph {
       nodes.join(contribs, nodes("node") === contribs("dst"), "left")
         .select(col("node"),
           (baseCol + coalesce(col("_prS"), lit(0L))).as("pr_rank"))
-        .localCheckpoint(true)
     }
   }
 
@@ -524,7 +520,7 @@ object Graph {
     // cheaper than double-storing the edge list
     val half = pairs.select(col(a).cast("long").as("_mbN"),
       col(b).cast("long").as("_mbM"), col(score).cast("long").as("_mbS"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val edges = half
       .unionByName(half.select(col("_mbM").as("_mbN"),
         col("_mbN").as("_mbM"), col("_mbS")))
@@ -557,7 +553,7 @@ object Graph {
         .agg(max(struct(col("_mbS"), (-col("_mbM")).as("_mbG"))).as("_mbB"))
         .select(col("_mbN"), (-col("_mbB._mbG")).as("_mbP"),
           col("_mbB._mbS").as("_mbS"))
-        .localCheckpoint(true) // self-joined below; measured r13: an
+        .transform(Materialize(_)) // self-joined below; measured r13: an
         // un-materialized best re-executes avail's anti-joins per side
         // and regressed q_icp_attach 11.7 → 27 s — keep the checkpoint
       val mutual = best.select(col("_mbN").as("node_a"),
@@ -565,10 +561,11 @@ object Graph {
         .join(best.select(col("_mbP").as("node_a"), col("_mbN").as("node_b")),
           Seq("node_a", "node_b"))
         .filter(col("node_a") < col("node_b"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
+      Materialize.release(best)
       if (mutual.isEmpty) {
         done = true
-        if (out == null) out = mutual
+        if (out == null) out = mutual else Materialize.release(mutual)
       } else {
         // the growing out/matched unions are RE-CHECKPOINTED each round
         // on purpose: keeping them as views over the per-round mutual
@@ -579,15 +576,22 @@ object Graph {
         // 4.76 → 5.31) — matched is probed twice per round and a
         // union-of-k-scans right side re-pays k scans + an exchange per
         // probe, losing more than the one compact write saves
+        val (prevOut, prevMatched) = (out, matched)
         out = if (out == null) mutual
-          else out.unionByName(mutual).localCheckpoint(true)
+          else Materialize(out.unionByName(mutual))
         val newM = mutual.select(col("node_a").as("_mbN"))
           .unionByName(mutual.select(col("node_b").as("_mbN")))
-        matched = (if (matched == null) newM
-          else matched.unionByName(newM)).localCheckpoint(true)
+        matched = Materialize(if (matched == null) newM
+          else matched.unionByName(newM))
+        if (prevOut != null) {
+          Materialize.release(prevOut)
+          Materialize.release(mutual)
+        }
+        if (prevMatched != null) Materialize.release(prevMatched)
         round += 1
       }
     }
+    if (matched != null) Materialize.release(matched)
     out
   }
 }

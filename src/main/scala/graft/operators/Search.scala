@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Corpus search scoring — the retrieval side of a training-data platform
   * (mining documents for a topic, building eval sets). Complements the
   * exact/ANN embedding search in [[Similarity]] with lexical ranking over
@@ -52,14 +54,14 @@ object Search {
     def df(i: Int) = s"_bm25_df_$i"
     val tok = docs.select(col(id), explode(split(lower(col(text)), "\\s+")).as("_bm25_tk"))
     // length + every per-term tf in ONE per-doc partial agg, materialized
-    // once (localCheckpoint) — the global stats row and the scorer both
+    // once (Materialize) — the global stats row and the scorer both
     // consume it, and relying on AQE exchange reuse instead would risk
     // doubling the heaviest scan on a large corpus
     val docStats = tok.groupBy(id).agg(
       count(lit(1)).as("_bm25_dl"),
       ti.map(i =>
         sum(when(col("_bm25_tk") === qTerms(i), 1).otherwise(0)).as(tf(i))): _*)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val stats = docStats.agg(
       count(lit(1)).as("_bm25_n"),
       ((sum("_bm25_dl").cast("double") / count(lit(1))).as("_bm25_avglen") +:
@@ -184,7 +186,7 @@ object Search {
       .crossJoin(nRow)
       .select(col("_cpB"),
         length(bin(expr("_cpN div _cpDf"))).cast("long").as("_cpIr"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val norms = buckets
       .select(explode(col("_cpB")).as("_cpE"), col("_cpIr"))
       .select(col("_cpE.k").as("_cpDoc"),
@@ -321,7 +323,7 @@ object Search {
       .crossJoin(nRow)
       .select(col("_cpG"), col("_cpDf"), col("_cpB"),
         length(bin(expr("_cpN div _cpDf"))).cast("long").as("_cpIr"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // corpus norms from the kept buckets (df <= maxDf, non-NULL)
     val oldNorms = inv.filter(col("_cpDf") <= maxDf && col("_cpB").isNotNull)
       .select(explode(col("_cpB")).as("_cpE"), col("_cpIr"))
@@ -341,7 +343,7 @@ object Search {
         coalesce(col("_cpB"),
           array().cast("array<struct<k:bigint,v:bigint>>")).as("_cpB"),
         coalesce(col("_cpIrC"), maxIr).as("_cpIr"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val newNorms = keptN.groupBy("new_id")
       .agg(sum(col("_cpWn").cast("decimal(38,0)") * col("_cpWn")).as("norm_new2"))
     val dots = keptN

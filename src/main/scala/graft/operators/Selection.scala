@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Exact distributed order statistics by iterative histogram bisection —
   * the selection problem ("the exact k-th smallest per group") WITHOUT a
   * sort, the classic MPP refinement of Blum et al. selection: each round
@@ -67,7 +69,7 @@ object Selection {
     // one pass: per-group extent + total weight; ranks are decided from it
     val base = df.filter(v.isNotNull && wgt.isNotNull)
       .select(gcols ++ Seq(v.as("_selV"), wgt.as("_selG")): _*)
-      .localCheckpoint(true) // scanned once per refinement round
+      .transform(Materialize(_)) // scanned once per refinement round
     val ext = base.groupBy(gcols: _*)
       .agg(min(col("_selV")).as("_selLo"), max(col("_selV")).as("_selHi"),
         sum(col("_selG")).as("_selN"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.hashing.MurmurHash3
 
+import graft.plans.Materialize
+
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`), designed for a 100 TB corpus:
   *
@@ -244,7 +246,7 @@ object Similarity {
       // nlist rows referenced from three plan branches (corpus assignment,
       // query probing) — materialize once instead of recomputing the
       // seed→assign→average subtree per branch
-      .localCheckpoint(true)
+      .transform(Materialize(_))
 
     ivfKnnWithCentroids(queries, corpus, id, emb, k, centroids, nprobe)
   }
@@ -297,7 +299,7 @@ object Similarity {
     * Output: (cell, c_emb), cell 0..k-1 in seed-id order. Per iteration:
     * O(n·k·dim) compute streamed through the corpus scan; nothing
     * data-sized shuffles or touches the driver. The k-row centroid frame
-    * is localCheckpointed per iteration, keeping lineage constant-depth
+    * is materialized per iteration, keeping lineage constant-depth
     * (un-checkpointed, the final plan would replay every earlier
     * iteration's corpus scan).
     */
@@ -315,12 +317,11 @@ object Similarity {
     val seeds = corpus.orderBy(col(id)).limit(k)
       .select(col(id).as("seed_id"), col(emb).as("c_emb"))
       .select((row_number().over(w) - 1).as("cell"), col("c_emb"))
-    (1 to iters).foldLeft(seeds.localCheckpoint(true)) { (centroids, _) =>
+    Materialize.rounds(seeds, iters) { (centroids, _) =>
       val moved = meanVectors(
         assignToCentroids(corpus, emb, centroids), Seq("cell"), emb, "c_new")
       centroids.join(moved, Seq("cell"), "left")
         .select(col("cell"), coalesce(col("c_new"), col("c_emb")).as("c_emb"))
-        .localCheckpoint(true)
     }
   }
 
@@ -452,11 +453,11 @@ object Similarity {
     val reps = kMeansCentroids(
       centroids.select(col("cell").as("_sgid"), col("c_emb").as("_sgv")),
       "_sgid", "_sgv", k = g, iters = 2)
-      .localCheckpoint(true) // reused: membership assign + the rep pack
+      .transform(Materialize(_)) // reused: membership assign + the rep pack
     val members = assignToCentroids(
       centroids.select(col("cell").as("_sgC"), col("c_emb")), "c_emb", reps)
       .select(col("cell").as("_sgG"), col("_sgC"), col("c_emb"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // only groups that WON a member are probe-able (a Lloyd step can
     // empty a group; probing it would left-join to nothing and waste a
     // slot)
@@ -467,7 +468,7 @@ object Similarity {
     val groupPacks = members
       .groupBy("_sgG")
       .agg(collect_list(struct(col("_sgC").as("cell"), col("c_emb"))).as("_sgMs"))
-      .localCheckpoint(true) // one plan subtree → ONE broadcast, reused per slot
+      .transform(Materialize(_)) // one plan subtree → ONE broadcast, reused per slot
     (repsPacked, groupPacks)
   }
 
@@ -629,11 +630,11 @@ object Similarity {
     val reps = kMeansCentroids(
       benchmark.select(col(bId).as("_bdI"), col(bEmb).as("_bdV")),
       "_bdI", "_bdV", k = g, iters = 2)
-      .localCheckpoint(true) // reused: member assignment + the rep pack
+      .transform(Materialize(_)) // reused: member assignment + the rep pack
     val members = assignToCentroids(
         benchmark.select(col(bEmb).as("_bdV")), "_bdV", reps)
       .select(col("cell").as("_bdG"), col("_bdV"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // only groups that won a member are probe-able (the ivfIndex rule)
     val repsPacked = reps
       .join(members.select(col("_bdG").as("cell")).distinct(), Seq("cell"),
@@ -641,7 +642,7 @@ object Similarity {
       .agg(collect_list(struct(col("cell").as("g"), col("c_emb"))).as("_bdGs"))
     val groupPacks = members
       .groupBy("_bdG").agg(collect_list(col("_bdV")).as("_bdMs"))
-      .localCheckpoint(true) // one plan subtree → ONE broadcast, reused per slot
+      .transform(Materialize(_)) // one plan subtree → ONE broadcast, reused per slot
     val probed = corpus.join(broadcast(repsPacked))
       .withColumn("_bdP", slice(array_sort(transform(col("_bdGs"),
         r => struct((-cosineSim(col(emb), r.getField("c_emb"))).as("k"),
@@ -794,7 +795,7 @@ object Similarity {
     require(!Seq("cell", "kept").contains(id),
       s"id column '$id' collides with semDedup's output columns")
     val assigned = assignToCentroids(corpus.select(col(id), col(emb)), emb, centroids)
-      .localCheckpoint(true) // reused by both pair sides and the flag join
+      .transform(Materialize(_)) // reused by both pair sides and the flag join
     val l = assigned.select(col(id).as("_sd_a"), col(emb).as("_sd_av"), col("cell"))
     val r = assigned.select(col(id).as("_sd_b"), col(emb).as("_sd_bv"), col("cell"))
     val dropped = l.join(r, Seq("cell"))
@@ -853,7 +854,7 @@ object Similarity {
     require(!Seq("cell", "kept").contains(id),
       s"id column '$id' collides with semDedup's output columns")
     val assigned = preAssigned.select(col(id), col(emb), col("cell"))
-      .localCheckpoint(true) // reused by both routes and the flag join
+      .transform(Materialize(_)) // reused by both routes and the flag join
     val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("_n"))
     val sized = assigned.join(graft.plans.Hints.broadcastIfSmall(sizes), "cell")
 
@@ -938,7 +939,7 @@ object Similarity {
     val cb0 = subVectors(seeds, "seed_id", "seed_emb", m, dim, "sid", "c_sub")
       .join(seeds.select("seed_id", "code"), col("sid") === col("seed_id"))
       .select(col("sub"), col("code"), col("c_sub"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // one Lloyd step: per-(sub, code) mean of the winning subvectors
     val assigned = subVectors(corpus, id, emb, m, dim, "vid", "v_sub")
       .join(broadcast(cb0), Seq("sub"))
@@ -951,7 +952,7 @@ object Similarity {
     // without this the corpus-wide Lloyd aggregation re-runs per consumer
     cb0.join(means, Seq("sub", "code"), "left")
       .select(col("sub"), col("code"), coalesce(col("m_sub"), col("c_sub")).as("c_sub"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
   }
 
   /** PQ encoding: each vector becomes `m` small codes — the nearest

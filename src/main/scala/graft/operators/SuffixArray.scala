@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftConf
+import graft.plans.Materialize
 
 /** Distributed suffix-array construction over the token stream of a
   * document corpus, by prefix doubling (Manber–Myers 1990; the sort/join
@@ -173,7 +174,7 @@ object SuffixArray {
     }
     val staged = if (keep.isEmpty) staged0
       else staged0.select(keep :+ col("_dnP") :+ col("_dnL"): _*)
-    val local = staged.localCheckpoint(true)
+    val local = Materialize(staged)
     val perPart = local.groupBy("_dnP").agg(max(col("_dnL")).as("_dnN"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
@@ -231,7 +232,7 @@ object SuffixArray {
   private[graft] def suffixRanksRadix(docs: DataFrame, id: String,
       text: String, buckets: Int, maxPrefix: Long, radix: Int): Ranked = {
     require(radix >= 2, s"need radix >= 2, got $radix")
-    val tok = tokens(docs, id, text).localCheckpoint(true)
+    val tok = Materialize(tokens(docs, id, text))
     val n = tok.count()
     val b = if (buckets > 0) buckets else autoBuckets(n, tok)
     val maxRow = tok.agg(max(col("off"))).head
@@ -243,18 +244,18 @@ object SuffixArray {
     // full distinct-aggregation over the corpus token frame; checkpointed,
     // the sampling re-reads a vocabulary-sized block instead.
     val (vocab, nVocab) = denseNumberCounted(
-      tok.select(col("_saW")).distinct().localCheckpoint(true),
+      Materialize(tok.select(col("_saW")).distinct()),
       Seq(col("_saW")), "rank", b)
     // each level is materialized once: the shift window and the LCP walk
     // read every level at least twice, and reading checkpoint blocks
     // beats re-deriving it (measured: leaving levels lazy cost +40% at
-    // sf0.1). NOT pre-partitioned or pre-sorted (r13): on this Spark a
-    // localCheckpoint's LogicalRDD reports UnknownPartitioning — plan-
-    // verified — so every consumer re-exchanges regardless and a
-    // repartition/sort before the checkpoint is a pure extra exchange
+    // sf0.1). NOT pre-partitioned or pre-sorted (r13): every consumer
+    // re-exchanges a checkpoint regardless, so a repartition/sort before
+    // it is a pure extra exchange. Never released: the LCP walk reads
+    // every level
     var cur = tok.join(vocab, Seq("_saW"))
       .select(col("doc"), col("off"), col("rank"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val levels = Seq.newBuilder[DataFrame]
     levels += cur
     var k = 1L
@@ -281,9 +282,8 @@ object SuffixArray {
       // (requireAllClusterKeysForCoPartition defaults true: subset
       // partitioning no longer counts as co-partitioned), i.e. 6
       // corpus-sized exchanges per round. The window is NOT free — cur is
-      // a localCheckpoint whose LogicalRDD reports UnknownPartitioning on
-      // this Spark (plan-verified, OPTIMIZATION_r13.md #4), so the window
-      // pays ONE hash(doc) exchange per round — but one exchange replaces
+      // a checkpoint (OPTIMIZATION_r13.md #4), so the window pays ONE
+      // hash(doc) exchange per round — but one exchange replaces
       // the former six. An off-the-end lead is NULL → coalesce 0, the
       // shared end-sentinel, exactly as the left joins produced.
       val byDoc = Window.partitionBy(col("doc")).orderBy(col("off"))
@@ -314,7 +314,7 @@ object SuffixArray {
         "_saNew", b, keep = Seq(col("doc"), col("off")))
       cur = numbered
         .select(col("doc"), col("off"), col("_saNew").as("rank"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       levels += cur
       k *= radix
       prevClasses = classes
@@ -395,7 +395,7 @@ object SuffixArray {
         Seq(col("rank"), col("doc"), col("off")), "_saPos",
         ranked.buckets, keep = Seq(col("doc"), col("off")))._1
       .join(preKeys, Seq("doc", "off"), "left")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val jCols = preOffs.indices.map(i => s"_saJ$i")
     val adj = pos.select((Seq(col("doc").as("doc_a"),
         col("off").as("off_a"), col("_saPos")) ++
@@ -593,7 +593,7 @@ object SuffixArray {
       // exchange below the window is reusable — un-materialized, the
       // sort + WindowExec + lead pass ran once per consumer (r14). The
       // checkpoint is ≤ (doc, off, 4 longs) per qualifying position.
-      .localCheckpoint(true)
+      .transform(Materialize(_))
   }
 
   /** Keep-first exact-substring dedup apply — the Lee et al. 2021
@@ -685,7 +685,7 @@ object SuffixArray {
     // needs a numeric id regardless of what the caller keys patterns by
     val pats = denseNumber(patterns.select(col(ptext).as("_saPat")).distinct(),
       Seq(col("_saPat")), "_saPid", 32)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val lab = corpus.select((col(id).cast("long") * 2).as("_saDid"),
         col(text).as("_saTxt"))
       .unionByName(pats.select((col("_saPid") * 2 + 1).as("_saDid"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
 import graft.state.Upserts
 
 /** Temporal (as-of) join: pair each left row with the single latest right
@@ -320,7 +321,7 @@ object Temporal {
       .select(col(user).as("_ru"),
         call_function("div", ts.cast("long"), lit(period)).as("_rp"))
       .distinct()
-      .localCheckpoint(true) // both the cohort agg and the cell count
+      .transform(Materialize(_)) // both the cohort agg and the cell count
     val first = e.groupBy("_ru").agg(min("_rp").as("cohort"))
     e.join(first, Seq("_ru"))
       .groupBy(col("cohort"), (col("_rp") - col("cohort")).as("week_offset"))

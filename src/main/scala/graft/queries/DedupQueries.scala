@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.plans.Materialize
 import graft.queries.Tables.t
 
 /* Dedup inputs are re-spread across the cluster before the signature
@@ -375,7 +376,7 @@ object DedupQueries {
         val pairs = graft.operators.Graph.mutualBestMatching(
           Dedup.jaccardPairs(idx), "id_a", "id_b", "n_common", maxRounds = 8)
         val order = graft.operators.Corpus.icpOrder(standing, "doc_id", pairs)
-          .localCheckpoint(true) // reused: the attach join + basePos count
+          .transform(Materialize(_)) // reused: the attach join + basePos count
         val cands = arrivals.select(col("doc_id"))
           .join(Dedup.jaccardPairsAgainst(arrivals, idx, "doc_id",
               "text", shingleN = 3)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.dsl.{KGlobalTable, KStream}
 import graft.plans.Hints.broadcastIfSmall
+import graft.plans.Materialize
 import graft.queries.Tables.t
 
 /** Headline analytical queries (TPC-H-shaped) exercising the engine the way
@@ -273,7 +274,7 @@ object HeadlineQueries {
         val r = t(s, d, "lineitem")
           .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp"))
           .groupBy("l_suppkey").agg(sum(rev).as("rev"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         r.join(broadcast(r.agg(max(col("rev")).as("mx"))), col("rev") === col("mx"))
           .join(broadcastIfSmall(t(s, d, "supplier").select("s_suppkey", "s_name")),
             col("l_suppkey") === col("s_suppkey"))

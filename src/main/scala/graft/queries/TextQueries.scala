@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis._
+import graft.plans.Materialize
 import graft.queries.Tables.t
 
 /** Text-analysis queries over the `documents` table — the LLM-pipeline
@@ -1042,7 +1043,7 @@ object TextQueries {
         val counts = t(s, d, "documents")
           .select(explode(split(lower(col("text")), "\\s+")).as("token"))
           .groupBy("token").agg(count(lit(1)).as("exact"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         val sketch = Sketches.cmsBuild(counts, col("token"),
           depth = 4, width = 512, weight = col("exact"))
         val top = graft.operators.Similarity.topKPerKey(counts, Nil,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.plans.Hints.broadcastIfSmall
+import graft.plans.Materialize
 import graft.queries.Tables.t
 
 /** The rest of the TPC-H analytic surface, adapted to the testdata star
@@ -207,7 +208,7 @@ object TpchQueries {
     // (TPC-H's fixed-fraction threshold is divided by SF for the same
     // reason: per-part share shrinks as the part count grows; a mean
     // multiple is scale-free, so the query stays non-trivial at every SF.)
-    // The per-part aggregate materializes once (localCheckpoint) so the
+    // The per-part aggregate materializes once (Materialize) so the
     // scalar threshold and the filter reuse it instead of rescanning.
     Q("q11_important_parts", Some("""
       |WITH val AS (
@@ -231,7 +232,7 @@ object TpchQueries {
           .join(broadcastIfSmall(supp), col("l_suppkey") === col("s_suppkey"), "left_semi")
           .groupBy("l_partkey")
           .agg(sum(value).as("v"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         v.crossJoin(broadcast(v.agg(
             (sum("v").cast("double") / count(lit(1)) * 2.0).as("threshold"))))
           .filter(col("v").cast("double") > col("threshold"))

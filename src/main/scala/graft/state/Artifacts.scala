@@ -179,6 +179,29 @@ object Artifacts {
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$prefix=$v/_SUCCESS")))
   }
 
+  /** A versioned artifact under `dir`: the latest `v=N` with N below
+    * `below` (exclusive), or an empty frame with the given schema before
+    * the first version.
+    *
+    * `below = None` is the consumer read ("the current version, please")
+    * and takes the newest COMPLETE version (`_SUCCESS` present), so a
+    * read concurrent with a refresh never opens the version still being
+    * written. A bound is the harness's own pre-state read, which keeps
+    * the raw listing for the reason [[readSlices]] gives.
+    */
+  def readVersion(spark: SparkSession, dir: String, ddl: String,
+      below: Option[Long]): DataFrame = {
+    val versions = below match {
+      case Some(b) => listVersions(spark, dir, "v").filter(_ < b)
+      case None => completedVersions(spark, dir, "v")
+    }
+    versions.maxOption.fold(empty(spark, ddl))(v => spark.read.parquet(s"$dir/v=$v"))
+  }
+
+  private def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
   private def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -231,9 +254,7 @@ object Artifacts {
       case (Some(b), Some(s)) => b.unionByName(s)
       case (Some(b), None) => b
       case (None, Some(s)) => s
-      case (None, None) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      case (None, None) => empty(spark, ddl)
     }
   }
 

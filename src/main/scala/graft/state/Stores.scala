@@ -5,6 +5,8 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Store registry + query surface: the batch analog of the reference's
   * store registry and HTTP interactive-query layer
   * (`/root/reference/kstream/store/registry.go:12-160`, store/http.go:120-399).
@@ -30,8 +32,11 @@ final class StoreRegistry(spark: SparkSession) {
 
   /** Streaming materialize (S4): called per micro-batch from
     * `writeStream.foreachBatch` — merge the batch into the keyed snapshot,
-    * latest `ord` wins. `localCheckpoint` truncates lineage so a
-    * long-running query doesn't accrete one union per batch; the durable
+    * latest `ord` wins. [[graft.plans.Materialize]] truncates lineage so a
+    * long-running query doesn't accrete one union per batch. The
+    * superseded snapshot is never released: a concurrent reader
+    * ([[StoreHttp]]) may still scan it, and reading a released
+    * checkpoint throws. The durable
     * production form of this is a MERGE into a transactional table or the
     * state store itself ([[graft.streaming.StreamingState.latestByKey]]).
     */
@@ -43,7 +48,7 @@ final class StoreRegistry(spark: SparkSession) {
     // foreachBatch hands us a DataFrame bound to a per-stream session
     // clone; rebind the materialized snapshot to the registry's session so
     // the temp view is visible to interactive queries.
-    val snap = merged.localCheckpoint(true)
+    val snap = Materialize(merged)
     keys.put(name, keyCols.head)
     register(name, spark.createDataFrame(snap.rdd, snap.schema))
   }

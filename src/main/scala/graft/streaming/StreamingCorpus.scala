@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.Corpus
 import graft.state.Artifacts
@@ -343,20 +342,13 @@ object StreamingCorpus {
   }
 
   /** The standing per-stratum admitted totals — the latest `counts/v=N`
-    * below the bound (exclusive; None reads the newest), or an empty
-    * (stratum, admitted) frame before the first batch.
+    * below the bound (exclusive; None reads the newest complete one), or
+    * an empty (stratum, admitted) frame before the first batch.
     */
   def standingQuotaCounts(spark: SparkSession, stateDir: String,
-      below: Option[Long] = None): DataFrame = {
-    val versions = Artifacts.listVersions(spark, s"$stateDir/counts", "v")
-      .filter(v => below.forall(v < _))
-    versions.maxOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/counts/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("stratum STRING, admitted BIGINT"))
-    }
-  }
+      below: Option[Long] = None): DataFrame =
+    Artifacts.readVersion(spark, s"$stateDir/counts",
+      "stratum STRING, admitted BIGINT", below)
 
   /** Every admitted row so far: (stratum, key, seq, batch). */
   def standingAdmitted(spark: SparkSession, stateDir: String): DataFrame =

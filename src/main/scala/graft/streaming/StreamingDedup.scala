@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import graft.plans.Materialize
 
 /** Streaming near-duplicate detection: documents arriving on a stream are
   * checked against every document seen so far — at ingest, not as a nightly
@@ -418,7 +419,7 @@ object StreamingDedup {
     val gramSet = corpus
       .select(explode(Dedup.shingles(col(text), shingleN)).as("g"))
       .distinct()
-      .localCheckpoint(true) // counted for sizing, then folded once
+      .transform(Materialize(_)) // counted for sizing, then folded once
     val n = gramSet.count()
     val want = math.max(bitsPerItem.toLong * math.max(n, 1L), 1L << 10)
     val numBits = ((want + 63) / 64) * 64

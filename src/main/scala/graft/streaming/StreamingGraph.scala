@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.Graph
+import graft.plans.Materialize
 
 /** Incremental link-graph analytics at ingest — the streaming deployment
   * of [[graft.operators.Graph]]: crawl edges arrive on a stream, the
@@ -89,7 +89,7 @@ object StreamingGraph {
     val pre = standingRanks(spark, stateDir, below = Some(batchId))
     val next = Graph.pageRankRounds(allEdges, pre, rounds,
       scale, dampNum, dampDen)
-    // pageRankRounds materializes its result via localCheckpoint, so
+    // pageRankRounds returns a materialized frame (Materialize), so
     // writing over a superseded version directory never races the read
     next.write.mode("overwrite").parquet(s"$stateDir/ranks/v=$batchId")
     next
@@ -134,7 +134,7 @@ object StreamingGraph {
     val pre = standingComponents(spark, stateDir, below = Some(batchId))
     val next = graft.operators.Dedup
       .resolveComponentsIncremental(pre, slice, "a_id", "b_id")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     next.write.mode("overwrite").parquet(s"$stateDir/components/v=$batchId")
     next
   }
@@ -143,34 +143,18 @@ object StreamingGraph {
     * [[standingRanks]]; empty two-column frame before the first refresh.
     */
   def standingComponents(spark: SparkSession, stateDir: String,
-      below: Option[Long] = None): DataFrame = {
-    val versions = graft.state.Artifacts
-      .listVersions(spark, s"$stateDir/components", "v")
-      .filter(v => below.forall(v < _))
-    versions.maxOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/components/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("node BIGINT, canonical BIGINT"))
-    }
-  }
+      below: Option[Long] = None): DataFrame =
+    graft.state.Artifacts.readVersion(spark, s"$stateDir/components",
+      "node BIGINT, canonical BIGINT", below)
 
   /** The standing rank artifact: the latest `ranks/v=N` with N below the
     * given bound (exclusive), or an empty (node, pr_rank) frame before
-    * the first refresh. `below = None` reads the newest version — the
-    * consumer-side call ("current ranks, please").
+    * the first refresh. `below = None` reads the newest COMPLETE
+    * version — the consumer-side call ("current ranks, please").
     */
   def standingRanks(spark: SparkSession, stateDir: String,
-      below: Option[Long] = None): DataFrame = {
-    val versions = graft.state.Artifacts
-      .listVersions(spark, s"$stateDir/ranks", "v")
-      .filter(v => below.forall(v < _))
-    versions.maxOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/ranks/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("node BIGINT, pr_rank BIGINT"))
-    }
-  }
+      below: Option[Long] = None): DataFrame =
+    graft.state.Artifacts.readVersion(spark, s"$stateDir/ranks",
+      "node BIGINT, pr_rank BIGINT", below)
 
 }

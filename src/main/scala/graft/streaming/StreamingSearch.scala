@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.plans.Materialize
 
 /** Cosine similarity at ingest — the streaming twin of
   * [[graft.operators.Search.cosinePairsAgainst]]: each document arriving
@@ -67,7 +68,7 @@ object StreamingSearch {
     val agg = tf.groupBy("g")
       .agg(count(lit(1)).as("df"),
         call_function("capped_collect2", col("d"), col("tf"), lit(maxDf)).as("b"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // ceiling-guarded collects ([[graft.state.Artifacts]] family rule):
     // the driver refuses past `ceiling` rows instead of OOMing mid-build
     val dropped = graft.state.Artifacts.boundedCollect(

@@ -42,6 +42,15 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.train(tiny, "text", merges = 5) === Seq.empty)
   }
 
+  test("train and trainBatched leave no materialization stored") {
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    val seq = Bpe.train(corpus, "text", merges = 4)
+    assert(persisted() -- before === Set.empty[Int], "train")
+    assert(Bpe.trainBatched(corpus, "text", merges = 4) === seq)
+    assert(persisted() -- before === Set.empty[Int], "trainBatched")
+  }
+
   test("mergePair: left-to-right non-overlapping application") {
     assert(Bpe.mergePair(Seq("a", "a", "a"), "a", "a") === Seq("aa", "a"))
     assert(Bpe.mergePair(Seq("x", "a", "b", "a", "b"), "a", "b") ===

@@ -62,6 +62,13 @@ class ClassifierSpec extends SparkSpec {
     assert(w.toSeq == w2.toSeq && bias == bias2, "training must be deterministic")
   }
 
+  test("trainPerceptron leaves no materialization stored") {
+    val docs = Seq(("gold marker", 1L), ("junk noise", -1L)).toDF("text", "y")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Classifier.trainPerceptron(docs, "text", col("y"), numBuckets = 16, epochs = 5)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before === Set.empty[Int])
+  }
+
   test("q_quality_classifier matches a driver-side recomputation at sf0.001") {
     val out = SparkEntry.queries("q_quality_classifier")(spark, sf)
     val viaOp = graft.operators.Classifier.scoreLinear(

@@ -27,6 +27,23 @@ class GraphSpec extends SparkSpec {
   private val g = Seq( // hub 1, a cycle, a source-only node 4, one parallel edge
     (1L, 2L), (1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L), (4L, 1L))
 
+  /** Ids of the session's persistent RDDs (local checkpoints included). */
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("pageRankExact frees the rounds it replaced: as many frames stay " +
+      "stored after 6 rounds as after 1") {
+    // the result is materialized when the call returns; counted right
+    // away, before driver GC can drop unreferenced frames from the map
+    def stored(iters: Int): Int = {
+      val before = persisted()
+      val ranks = Graph.pageRankExact(g.toDF("src", "dst"), iters)
+      val n = (persisted() -- before).size
+      assert(ranks.as[(Long, Long)].collect().toMap === model(g, iters))
+      n
+    }
+    assert(stored(6) === stored(1))
+  }
+
   test("pageRankExact matches the integer recurrence exactly") {
     val got = Graph.pageRankExact(g.toDF("src", "dst"), iters = 3)
       .as[(Long, Long)].collect().toMap

@@ -1767,6 +1767,21 @@ class StreamingOpsSpec extends SparkSpec {
     assert(after === streamed, "batch replay must not advance the ranks")
   }
 
+  test("standingRanks skips a newest ranks/v=N that has no _SUCCESS marker") {
+    val state = java.nio.file.Files.createTempDirectory("graft_pr_torn").toString
+    Seq((1L, 10L)).toDF("node", "pr_rank")
+      .write.parquet(s"$state/ranks/v=1")
+    // a refresh still writing v=2: its files are there, its marker is not
+    Seq((1L, 20L)).toDF("node", "pr_rank")
+      .write.parquet(s"$state/ranks/v=2")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$state/ranks/v=2/_SUCCESS"))
+    assert(graft.streaming.StreamingGraph.standingRanks(spark, state)
+      .as[(Long, Long)].collect().toSeq === Seq((1L, 10L)))
+    // the harness's pre-state read keeps the raw listing
+    assert(graft.streaming.StreamingGraph.standingRanks(spark, state, below = Some(3L))
+      .as[(Long, Long)].collect().toSeq === Seq((1L, 20L)))
+  }
+
   test("fuzzy match at ingest: streamed typo variants equal the batch operator") {
     // entity resolution at the door: frozen gram-rarity artifact trained
     // in batch, arriving names prefix-indexed against it, in-bucket exact

@@ -12,7 +12,8 @@
 #                                       documented driver-insensitive
 #                                       int32-vs-BIGINT rows)
 #   4. tools/bench100x_totals.py --check   (SCALING.md derived blocks fresh)
-#   5. git status --porcelain          (tree clean apart from the staged
+#   5. no .localCheckpoint( in src/main outside plans/Materialize.scala
+#   6. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
@@ -52,6 +53,18 @@ if [[ -f BENCH_FULL.json ]]; then
   python3 tools/check_bench_json.py BENCH_FULL.json || fail=1
 else
   echo "BENCH_FULL.json absent — skipped"
+fi
+
+# one materialization primitive: graft.plans.Materialize owns the policy,
+# so no other src/main file may call localCheckpoint directly
+step "localCheckpoint only in Materialize.scala"
+stray="$(grep -rn '\.localCheckpoint(' src/main | grep -v '^src/main/scala/graft/plans/Materialize\.scala:')"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "route these through graft.plans.Materialize"
+  fail=1
+else
+  echo "ok"
 fi
 
 step "git status --porcelain"
