@@ -41,20 +41,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    CosineSimilarity.cosine(x.numElements(), x.getFloat, y.numElements(), y.getFloat)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -85,4 +72,29 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The `cosine_sim` arithmetic over the common prefix of two vectors
+    * of lengths `na` and `nb`, read through `a` and `b`: per-element
+    * double widening, one left-to-right pass — what `doGenCode` emits,
+    * and what the streaming state folds call on the vectors they hold.
+    */
+  def cosine(na: Int, a: Int => Float, nb: Int, b: Int => Float): Double = {
+    val n = math.min(na, nb)
+    var dot = 0.0
+    var sa = 0.0
+    var sb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dot += x * y
+      sa += x * x
+      sb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(sa) * math.sqrt(sb))
+  }
 }

@@ -57,20 +57,26 @@ object Corpus {
           col("col.n").as("chunk_tokens"), md5(col("col.txt")).as("chunk_md5")): _*)
   }
 
-  /** One row per word n-gram OCCURRENCE (not distinct): (id, g). Documents
-    * shorter than n tokens produce no rows — callers that must keep them
-    * re-join from the doc table. Narrow (one explode), never shuffles.
+  /** Word n-gram occurrences of a text (not distinct), in token order:
+    * lowercased whitespace tokens — `split` keeps empty tokens, so a text
+    * ending in whitespace has a trailing empty one — windows of n joined
+    * by a space. A text shorter than n tokens, or null, has no grams.
     */
-  def ngramOccurrences(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
-    val grams = element_at(
-      transform(array(split(lower(col(text)), "\\s+")), tk =>
+  def ngrams(text: Column, n: Int): Column =
+    element_at(
+      transform(array(split(lower(text), "\\s+")), tk =>
         when(size(tk) >= n,
           transform(sequence(lit(0), size(tk) - n),
             i => concat_ws(" ", slice(tk, i + lit(1), lit(n)))))
           .otherwise(array().cast("array<string>"))),
       1)
-    docs.select(col(id), explode(grams).as("g"))
-  }
+
+  /** One row per word n-gram OCCURRENCE (not distinct): (id, g). Documents
+    * shorter than n tokens produce no rows — callers that must keep them
+    * re-join from the doc table. Narrow (one explode), never shuffles.
+    */
+  def ngramOccurrences(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    docs.select(col(id), explode(ngrams(col(text), n)).as("g"))
 
   /** Gopher-style repetition/boilerplate stats per document: total bigram
     * occurrences, the fraction held by the single most frequent bigram, and

@@ -678,7 +678,8 @@ object Multimodal {
     * meta row, not the gate, is where emptiness is visible).
     *
     * Stateless per record, so the SAME call is the streaming at-ingest
-    * deployment — see `StreamingQuality.audioGateAtIngest`.
+    * deployment: it runs unchanged on a `readStream` frame (no state
+    * store, no watermark, append-safe; MultimodalSpec pins stream ≡ batch).
     */
   final case class AudioGate(media_id: Long, n_windows: Long,
       n_silent: Long, n_clipped: Long, peak_abs: Int, keep: Boolean)

@@ -22,7 +22,10 @@ import graft.state.Artifacts
   * because the document boundary IS the row boundary at ingest. The
   * window list and the greedy fold are the SAME definitions the batch
   * operators use (`Corpus.tokenWindows` / `Corpus.greedyPackFold`), so
-  * the two forms cannot drift; a test additionally pins them equal.
+  * the two forms cannot drift; a test additionally pins them equal. This
+  * is the rule for every at-ingest operator in `graft.streaming`: it
+  * computes with the batch kernel, and only its state fold, ledger or
+  * frozen-artifact scoring is stream-specific.
   *
   * The LEDGERED operators further down (in-context attach, pack append,
   * admission quota) are `foreachBatch` harnesses on the

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Multimodal}
 import graft.plans.Materialize
 
 /** Streaming near-duplicate detection: documents arriving on a stream are
@@ -115,37 +116,29 @@ object StreamingDedup {
 
   /** Content-defined-chunk dedup at ingest — the streaming twin of
     * [[graft.operators.Multimodal.cdcChunks]] + `cdcDedup`: each arriving
-    * payload is chunked LOCALLY (CDC boundaries are a pure function of
-    * the bytes — no shuffle, no state needed to chunk), then every chunk
+    * payload is chunked by the batch operator itself (the `cdc_chunks`
+    * expression — CDC boundaries are a pure function of the bytes, so the
+    * chunking is narrow, with no shuffle and no state), then every chunk
     * digest is classified against all chunks EVER seen via
     * flatMapGroupsWithState keyed by digest. `is_new = true` means
     * "store this block" — the content-addressable-store question a
     * dedup ingest tier answers per record. First occurrence wins by
     * (media_id, chunk_no) within a batch and by arrival across batches;
     * state is one boolean per DISTINCT chunk digest, partitioned by
-    * digest hash across executors.
-    *
-    * The local chunker replays the batch operator's arithmetic exactly
-    * (uppercase-hex plane, md5 window hash, 15-hex-digit 60-bit
-    * boundary test), so the stream's kept-chunk inventory equals the
-    * batch inventory when ids arrive in ascending order — pinned by
+    * digest hash across executors. A null text yields no rows, as in the
+    * batch operator. The stream's kept-chunk inventory equals the batch
+    * inventory when ids arrive in ascending order — pinned by
     * StreamingOpsSpec.
     */
   def cdcChunksAtIngest(docs: DataFrame, id: String, text: String,
       windowBytes: Int, maskBits: Int): Dataset[ChunkOut] = {
-    require(windowBytes >= 1 && maskBits >= 0 && maskBits <= 32,
-      s"bad cdc params: windowBytes=$windowBytes maskBits=$maskBits")
     val spark = docs.sparkSession
     import spark.implicits._
-    val chunks = docs
-      .select(col(id).cast("long").as("media_id"), col(text).as("_t"))
-      .as[(Long, String)]
-      .flatMap { case (mid, t) =>
-        cdcChunksLocal(Option(t).getOrElse("").getBytes("UTF-8"),
-          windowBytes, maskBits).zipWithIndex.map { case ((st, ln, h), i) =>
-          (h, mid, i.toLong, st, ln)
-        }
-      }
+    val chunks = Multimodal.cdcChunks(
+        Multimodal.attachBlob(docs, id, text, "text/plain"), windowBytes, maskBits)
+      .select(col("chunk_md5"), col("media_id"), col("chunk_no"),
+        col("start"), col("chunk_len"))
+      .as[(String, Long, Long, Long, Long)]
     chunks.groupByKey(_._1)
       .flatMapGroupsWithState[Boolean, ChunkOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
@@ -162,30 +155,6 @@ object StreamingDedup {
       }
   }
 
-  /** Single-payload CDC: (start, len, md5) per chunk — byte-identical to
-    * the distributed [[graft.operators.Multimodal.cdcChunks]] arithmetic
-    * (boundary where the 60-bit hash of the window's uppercase-hex text
-    * has `maskBits` zero low bits; empty payload = one empty chunk).
-    */
-  private[graft] def cdcChunksLocal(bytes: Array[Byte], w: Int,
-      maskBits: Int): Seq[(Long, Long, String)] = {
-    def md5hex(s: String): String = java.security.MessageDigest
-      .getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val hx = bytes.map("%02X".format(_)).mkString
-    val len = bytes.length
-    val modulus = 1L << maskBits
-    val bounds = (w until len).filter { p =>
-      java.lang.Long.parseLong(
-        md5hex(hx.substring((p - w) * 2, p * 2)).take(15), 16) % modulus == 0
-    }
-    val starts = 0 +: bounds
-    val ends = bounds :+ len
-    starts.zip(ends).map { case (st, en) =>
-      (st.toLong, (en - st).toLong, md5hex(hx.substring(st * 2, en * 2)))
-    }
-  }
-
   final case class FuzzyMatch(name_a: String, name_b: String, dist: Int)
 
   /** Online edit-distance matching at ingest — the streaming twin of
@@ -196,10 +165,12 @@ object StreamingDedup {
     * ([[Dedup.gramRarityTable]], collected once — vocabulary-sized by
     * construction) become the bucket keys; flatMapGroupsWithState keyed
     * by (gram, occ) holds the names seen in that bucket and verifies
-    * exact Levenshtein against each. The prefix-filter completeness
-    * proof needs only a consistent total order, so the frozen artifact
-    * finds every true pair among ALL streamed names (unseen grams rank
-    * as frequency 0 — rarest, which only strengthens the prefix).
+    * exact Levenshtein against each with Spark's `levenshtein` kernel
+    * (`UTF8String.levenshteinDistance`, counting code points). The
+    * prefix-filter completeness proof needs only a consistent total
+    * order, so the frozen artifact finds every true pair among ALL
+    * streamed names (unseen grams rank as frequency 0 — rarest, which
+    * only strengthens the prefix).
     * Names short enough to share zero grams with a true partner
     * (len ≤ q·(k+1)-1+k) additionally route through one dedicated short
     * bucket — the online analogue of the batch short pool, population
@@ -240,8 +211,9 @@ object StreamingDedup {
           // StreamingSimilarity.semDedupAtIngest
           rows.map(_._3).toSeq.distinct.sorted.foreach { n =>
             if (!seen.contains(n)) {
+              val un = UTF8String.fromString(n)
               seen.foreach { m =>
-                val d = levLocal(n, m)
+                val d = un.levenshteinDistance(UTF8String.fromString(m))
                 if (d <= maxDist)
                   out += FuzzyMatch(
                     if (n < m) n else m, if (n < m) m else n, d)
@@ -291,12 +263,15 @@ object StreamingDedup {
       s"need 0 < minNum/minDen <= 1, got $minNum/$minDen")
     val spark = docs.sparkSession
     import spark.implicits._
-    val keyed = docs
-      .select(col(id).cast("long").as("i"), lower(col(text)).as("t"))
-      .filter(col("i").isNotNull && col("t").isNotNull)
-      .as[(Long, String)]
-      .flatMap { case (i, t) =>
-        val fps = shingleFpsLocal(t, shingleN)
+    // the fingerprint set of the batch operator's `hashedGrams`, sorted
+    // ascending (the verify intersection walks two sorted arrays)
+    val fingerprints = array_sort(array_distinct(
+      transform(Dedup.shingles(col(text), shingleN), Dedup.portableHash64(_))))
+    val keyed = docs.filter(col(text).isNotNull)
+      .select(col(id).cast("long").as("i"), fingerprints.as("fps"))
+      .filter(col("i").isNotNull)
+      .as[(Long, Array[Long])]
+      .flatMap { case (i, fps) =>
         val s = fps.length
         val prefLen = s - (s * minNum + minDen - 1) / minDen + 1
         fps.sortBy(g => (rarity.getOrElse(g, 0L), g))
@@ -429,23 +404,6 @@ object StreamingDedup {
       .head().getAs[Array[Byte]]("bf")
   }
 
-  /** Local twin of `shingles` + `portableHash64`: distinct lowercase word
-    * n-gram MD5-prefix fingerprints, sorted ascending (the verify
-    * intersection walks two sorted arrays).
-    */
-  private def shingleFpsLocal(lowered: String, n: Int): Array[Long] = {
-    val toks = lowered.split("\\s+").toSeq
-    val sh =
-      if (toks.size < n) Seq(toks.mkString(" "))
-      else toks.sliding(n).map(_.mkString(" ")).toSeq
-    sh.distinct.map { g =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(g.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }.distinct.sorted.toArray
-  }
-
   private def sortedIntersectCount(a: Array[Long], b: Array[Long]): Long = {
     var i = 0; var j = 0; var c = 0L
     while (i < a.length && j < b.length) {
@@ -454,28 +412,5 @@ object StreamingDedup {
       else j += 1
     }
     c
-  }
-
-  /** Plain DP Levenshtein for in-state verification (the batch operator
-    * uses the codegen'd expression; state folds run per bucket row).
-    */
-  private def levLocal(a: String, b: String): Int = {
-    if (a.isEmpty) return b.length
-    if (b.isEmpty) return a.length
-    var prev = Array.tabulate(b.length + 1)(identity)
-    var cur = new Array[Int](b.length + 1)
-    var i = 1
-    while (i <= a.length) {
-      cur(0) = i
-      var j = 1
-      while (j <= b.length) {
-        val cost = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
-        cur(j) = math.min(math.min(prev(j) + 1, cur(j - 1) + 1), prev(j - 1) + cost)
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    prev(b.length)
   }
 }

@@ -18,6 +18,12 @@ import graft.operators.Corpus
   * corpus — the same artifact a production frequency filter ships) joined
   * broadcast; refreshing it between micro-batches is
   * [[GlobalTableRefresh.enrichEachBatch]] composed over this.
+  *
+  * Every gate scores with the batch operator's own Column expressions
+  * (the decontamination gates take their grams from [[Corpus.ngrams]]);
+  * only the frozen artifact is stream-specific. A batch gate that needs
+  * no artifact, such as [[graft.operators.Multimodal.audioGate]], runs
+  * unchanged on a `readStream` frame and has no twin here.
   */
 object StreamingQuality {
 
@@ -114,24 +120,6 @@ object StreamingQuality {
       .drop("_thr")
   }
 
-  /** Audio quality gate at ingest — the streaming twin of
-    * [[graft.operators.Multimodal.audioGate]], completing the gate
-    * family: every arriving media row is decoded and classified from its
-    * per-window exact integer statistics (silence within `maxSilencePpm`
-    * parts-per-million of windows, no window's peak at `peakCeiling`) in
-    * the SAME per-partition typed decode pass the batch operator uses —
-    * stateless per record, so it runs unchanged on a `readStream` frame:
-    * no state store, no watermark, append-safe, checkpoint-restart-safe
-    * (re-decoding a replayed payload is deterministic). The per-media
-    * fold happens inside the decode, so payloads never shuffle and the
-    * stream never needs a streaming aggregation.
-    */
-  def audioGateAtIngest(media: DataFrame, windowFrames: Int,
-      maxSilencePpm: Long, peakCeiling: Int,
-      silenceEnergyPerSample: Long = 0L): DataFrame =
-    graft.operators.Multimodal.audioGate(media, windowFrames,
-      maxSilencePpm, peakCeiling, silenceEnergyPerSample).toDF()
-
   /** Benchmark decontamination at ingest — the streaming twin of
     * [[graft.operators.Corpus.contamination]]: count each arriving
     * document's DISTINCT word n-grams that collide with a frozen
@@ -140,9 +128,9 @@ object StreamingQuality {
     * `maxShared`. The gram set folds into ONE map value broadcast onto
     * the stream (eval benchmarks are bounded — thousands of grams, not
     * corpus-scaled), and the overlap is a per-row array fold — stateless,
-    * append-safe, checkpoint-free, identical gram formation to the batch
-    * operator (lowercased whitespace tokens, docs shorter than n share
-    * nothing). Adds `n_shared` and `keep`.
+    * append-safe, checkpoint-free, the batch operator's gram column
+    * ([[Corpus.ngrams]]: docs shorter than n share nothing). Adds
+    * `n_shared` and `keep`.
     */
   def decontaminateAtIngest(docs: DataFrame, text: String,
       benchmarkGrams: DataFrame, n: Int, maxShared: Int = 0): DataFrame = {
@@ -152,13 +140,7 @@ object StreamingQuality {
       s"input already has a $c column"))
     val benchMap = benchmarkGrams.agg(
       map_from_entries(collect_list(struct(col("g"), lit(true)))).as("_g_bench"))
-    val grams = element_at(
-      transform(array(split(lower(col(text)), "\\s+")), tk =>
-        when(size(tk) >= n,
-          array_distinct(transform(sequence(lit(0), size(tk) - n),
-            i => concat_ws(" ", slice(tk, i + lit(1), lit(n))))))
-          .otherwise(array().cast("array<string>"))),
-      1)
+    val grams = array_distinct(Corpus.ngrams(col(text), n))
     docs.crossJoin(broadcast(benchMap))
       .withColumn("_g_grams", grams)
       .withColumn("n_shared", aggregate(col("_g_grams"), lit(0L), (acc, g) =>
@@ -193,13 +175,7 @@ object StreamingQuality {
     require(maxFlagged >= 0, s"need maxFlagged >= 0, got $maxFlagged")
     require(!docs.columns.contains("n_flagged"),
       "input already has an n_flagged column")
-    val grams = element_at(
-      transform(array(split(lower(col(text)), "\\s+")), tk =>
-        when(size(tk) >= n,
-          array_distinct(transform(sequence(lit(0), size(tk) - n),
-            i => concat_ws(" ", slice(tk, i + lit(1), lit(n))))))
-          .otherwise(array().cast("array<string>"))),
-      1)
+    val grams = array_distinct(Corpus.ngrams(col(text), n))
     docs
       .withColumn("n_flagged",
         size(filter(grams, g =>

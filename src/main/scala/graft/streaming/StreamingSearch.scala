@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Corpus, Dedup}
 import graft.plans.Materialize
 
 /** Cosine similarity at ingest — the streaming twin of
@@ -17,12 +17,19 @@ import graft.plans.Materialize
   * release) carries per kept gram (corpus df ≤ maxDf) its quantized
   * rarity and (old_id, weight) postings, each posting annotated with its
   * document's norm²; plus the boilerplate-gram hash set (df > maxDf).
-  * That makes scoring STATELESS per record — tokenize, weight under the
+  * That makes scoring STATELESS per record — the gram hashes are the
+  * batch expression the inventory is built from (`shinglesMultiset` +
+  * `portableHash64`), then the JVM side only weights them under the
   * frozen statistics (corpus-unseen grams take the max rarity and
-  * dilute), accumulate per-old dots, decide the exact cross-multiplied
-  * integer predicate in BigInt — so matches are deterministic under any
-  * arrival order, batching, or retry, and equal the batch operator
-  * record-for-record (spec-pinned).
+  * dilute), accumulates per-old dots and decides the exact
+  * cross-multiplied integer predicate in BigInt — so matches are
+  * deterministic under any arrival order, batching, or retry, and equal
+  * the batch operator record-for-record (spec-pinned).
+  *
+  * [[continuationDeltasAtIngest]] follows the same rule: its windows are
+  * the batch tokenization ([[graft.operators.Corpus.ngrams]] over
+  * `split(lower(text))`, which keeps empty tokens), and only the watched
+  * pattern set is stream-specific.
   *
   * Scale note: the artifact is (vocab × maxDf + matched-corpus) sized —
   * the door-check service's working set, same dispensation as the frozen
@@ -96,7 +103,8 @@ object StreamingSearch {
   /** Score a stream of (id, text) documents against the frozen inventory;
     * emits one [[CosineMatch]] per (new, old) pair whose exact quantized
     * TF-IDF cosine clears `minSimNum/minSimDen`. Stateless — plain
-    * flatMap, no state store; works identically on batch frames.
+    * flatMap, no state store; works identically on batch frames. A null
+    * text matches nothing.
     */
   def cosineMatchAtIngest(docs: DataFrame, id: String, text: String,
       inv: CosineInventory, minSimNum: Int,
@@ -108,13 +116,15 @@ object StreamingSearch {
     val shingleN = inv.shingleN
     val num2 = BigInt(minSimNum.toLong * minSimNum)
     val den2 = BigInt(minSimDen.toLong * minSimDen)
-    docs.select(col(id).cast("long").as("d"), col(text).cast("string").as("t"))
-      .as[(Long, String)]
-      .flatMap { case (newId, t) =>
-        val toks = t.toLowerCase.split("\\s+").toSeq
-        val gs = if (toks.size < shingleN) Seq(toks.mkString(" "))
-          else toks.sliding(shingleN).map(_.mkString(" ")).toSeq
-        val tf = gs.groupBy(hash64).view.mapValues(_.size.toLong)
+    // the batch operator's gram hashes (`buildCosineInventory`'s
+    // expression); a null text has no grams and matches nothing
+    val gramHashes = transform(
+      Dedup.shinglesMultiset(col(text).cast("string"), shingleN), Dedup.portableHash64(_))
+    docs.filter(col(text).isNotNull)
+      .select(col(id).cast("long").as("d"), gramHashes.as("gs"))
+      .as[(Long, Seq[Long])]
+      .flatMap { case (newId, gs) =>
+        val tf = gs.groupBy(identity).view.mapValues(_.size.toLong)
           .filter(e => !inv.dropped(e._1)).toMap
         val w = tf.map { case (g, c) =>
           g -> c * inv.grams.get(g).map(_._1).getOrElse(inv.maxIr)
@@ -137,15 +147,6 @@ object StreamingSearch {
       }
   }
 
-  /** JVM-side twin of [[Dedup.portableHash64]] (md5 first 15 hex chars,
-    * base 16) — state/artifact lookups run off-plan.
-    */
-  private def hash64(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-
   /** ∞-gram continuation deltas at ingest — the streaming twin of
     * [[graft.operators.SuffixArray.ngramContinuations]] for a FIXED
     * watched pattern set (the served n-gram queries): each arriving
@@ -154,30 +155,21 @@ object StreamingSearch {
     * count over those rows equals the batch tally over the union of all
     * batches — the emission is a stateless narrow map per record, so
     * counts are invariant to arrival order, batching, and retry
-    * (spec-pinned stream≡batch). The batch operator's SA index answers
+    * (spec-pinned stream≡batch). A null text emits nothing, as the batch
+    * operator skips it. The batch operator's SA index answers
     * ARBITRARY patterns over a frozen corpus; this path keeps a bounded
     * watched set's continuation distribution live as data lands.
     */
   def continuationDeltasAtIngest(docs: DataFrame, id: String, text: String,
       patterns: Set[String], n: Int): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val pats = patterns // bounded watched set, serialized with the closure
-    docs.select(col(id).cast("long"), lower(col(text)))
-      .as[(Long, String)]
-      .flatMap { case (_, t) =>
-        // identical tokenization to the batch path's tokens(): split on
-        // \s+ WITHOUT dropping empties, windows of n, sentinel at end
-        val toks = Option(t).toSeq.flatMap(_.split("\\s+").toSeq)
-        (0 to toks.size - n).iterator
-          .map { off =>
-            val w = toks.slice(off, off + n).mkString(" ")
-            val nx = if (off + n < toks.size) toks(off + n) else "</s>"
-            (w, nx)
-          }
-          .filter(p => pats.contains(p._1))
-      }
-      .toDF("pattern", "next_tok")
+    val toks = split(lower(col(text)), "\\s+")
+    docs.select(toks.as("_ctT"),
+        posexplode(Corpus.ngrams(col(text), n)).as(Seq("_ctO", "pattern")))
+      .filter(col("pattern").isin(patterns.toSeq: _*))
+      .select(col("pattern"),
+        when(col("_ctO") + n < size(col("_ctT")),
+          element_at(col("_ctT"), col("_ctO") + n + 1))
+          .otherwise(lit("</s>")).as("next_tok"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.CosineSimilarity
 import graft.operators.Similarity
 
 /** Streaming similarity search at ingest: each vector arriving on the
@@ -33,10 +34,10 @@ object StreamingSimilarity {
       .select(col(id).cast("long").as("vid"), col(emb).as("v"))
       .withColumn("bk", explode(Similarity.lshKeys(col("v"), tables, bits, dim)))
       .select(col("bk.tbl"), col("bk.bucket"), col("vid"), col("v"))
-      .as[(Int, Int, Long, Seq[Float])]
+      .as[(Int, Int, Long, Array[Float])]
 
     keyed.groupByKey(x => (x._1, x._2))
-      .flatMapGroupsWithState[List[(Long, Seq[Float])], Match](
+      .flatMapGroupsWithState[List[(Long, Array[Float])], Match](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (_, rows, state) =>
           var seen = state.getOption.getOrElse(Nil)
@@ -44,7 +45,7 @@ object StreamingSimilarity {
           rows.foreach { case (_, _, vid, v) =>
             seen.foreach { case (pid, pv) =>
               if (pid != vid) {
-                val cos = cosineLocal(pv, v)
+                val cos = CosineSimilarity.cosine(pv.length, pv(_), v.length, v(_))
                 if (cos >= minCosine)
                   out += Match(math.min(pid, vid), math.max(pid, vid), cos)
               }
@@ -86,40 +87,22 @@ object StreamingSimilarity {
     Similarity.assignToCentroids(
         vectors.select(col(id).cast("long").as("vid"), col(emb).as("v")), "v", centroids)
       .select(col("cell"), col("vid"), col("v"))
-      .as[(Int, Long, Seq[Float])]
+      .as[(Int, Long, Array[Float])]
       .groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Long, Seq[Float])], Admission](
+      .flatMapGroupsWithState[List[(Long, Array[Float])], Admission](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (cell, rows, state) =>
           var admitted = state.getOption.getOrElse(Nil)
           val out = Seq.newBuilder[Admission]
           rows.toSeq.sortBy(_._2).foreach { case (_, vid, v) =>
-            val dup = admitted.exists { case (_, pv) => cosineLocal(pv, v) >= minCosine }
+            val dup = admitted.exists { case (_, pv) =>
+              CosineSimilarity.cosine(pv.length, pv(_), v.length, v(_)) >= minCosine
+            }
             if (!dup) admitted = (vid, v) :: admitted
             out += Admission(vid, cell, !dup)
           }
           state.update(admitted)
           out.result().iterator
       }
-  }
-
-  /** Same arithmetic as the `cosine_sim` expression (per-element double
-    * widening, left fold) — JVM-side because state rows live off-plan.
-    */
-  private def cosineLocal(a: Seq[Float], b: Seq[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble
-      val y = b(i).toDouble
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
   }
 }

@@ -34,22 +34,27 @@ object StreamingState {
   def latestByKey(ds: Dataset[KRecord]): Dataset[KRecord] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.key)
-      .mapGroupsWithState[KRecord, KRecord](GroupStateTimeout.NoTimeout) {
-        (key, records, state: GroupState[KRecord]) =>
-          val incoming = records.maxBy(_.ord)
-          val current = state.getOption
-          val winner = current match {
-            case Some(c) if c.ord >= incoming.ord => c
-            case _                                => incoming
-          }
-          if (winner.value == null) {
-            state.remove()
-            KRecord(key, winner.ord, null, winner.version)
-          } else {
-            state.update(winner)
-            winner
-          }
-      }
+      .mapGroupsWithState[KRecord, KRecord](GroupStateTimeout.NoTimeout)(latestStep)
+  }
+
+  /** The latest-by-key step: the newest of the stored and the incoming
+    * records wins; a winning tombstone removes the key's state and is
+    * re-emitted, any other winner is stored and emitted.
+    */
+  private def latestStep(key: String, records: Iterator[KRecord],
+      state: GroupState[KRecord]): KRecord = {
+    val incoming = records.maxBy(_.ord)
+    val winner = state.getOption match {
+      case Some(c) if c.ord >= incoming.ord => c
+      case _                                => incoming
+    }
+    if (winner.value == null) {
+      state.remove()
+      KRecord(key, winner.ord, null, winner.version)
+    } else {
+      state.update(winner)
+      winner
+    }
   }
 
   /** A1 with TTL: the reference's per-record expiry
@@ -69,19 +74,9 @@ object StreamingState {
             state.remove()
             KRecord(key, last.ord, null, last.version) // expiry tombstone
           } else {
-            val incoming = records.maxBy(_.ord)
-            val winner = state.getOption match {
-              case Some(c) if c.ord >= incoming.ord => c
-              case _                                => incoming
-            }
-            if (winner.value == null) {
-              state.remove()
-              KRecord(key, winner.ord, null, winner.version)
-            } else {
-              state.update(winner)
-              state.setTimeoutDuration(ttl.toMillis)
-              winner
-            }
+            val out = latestStep(key, records, state)
+            if (state.exists) state.setTimeoutDuration(ttl.toMillis)
+            out
           }
       }
   }

@@ -389,13 +389,14 @@ class MultimodalSpec extends SparkSpec {
       windowFrames = 128, maxSilencePpm = 0L, peakCeiling = 32767).head()
     assert((empty.n_windows, empty.keep) === ((0L, true)))
 
-    // at-ingest twin: stateless on a streaming frame, stream ≡ batch
-    val batchRows = streaming.StreamingQuality.audioGateAtIngest(
-      media, 128, 500000L, 32767).collect().toSet
+    // at ingest: the same operator, stateless on a streaming frame,
+    // stream ≡ batch
+    val batchRows = Multimodal.audioGate(
+      media, 128, 500000L, 32767).toDF().collect().toSet
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Array[Byte])](spark)
-    val out = streaming.StreamingQuality.audioGateAtIngest(
-      mem.toDF().toDF("media_id", "mime", "payload"), 128, 500000L, 32767)
+    val out = Multimodal.audioGate(
+      mem.toDF().toDF("media_id", "mime", "payload"), 128, 500000L, 32767).toDF()
     assert(out.isStreaming, "the audio gate must stream without state")
     val q = out.writeStream.format("memory")
       .queryName("audio_gate_sink").outputMode("append").start()

@@ -833,8 +833,9 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("interval matching at ingest: range + overlap equal the batch banded joins") {
+    // the batch banded joins run unchanged on a stream: a stream-static
+    // equi-join on the band key, no state store, no watermark
     import graft.operators.Temporal
-    import graft.streaming.StreamingTemporal
     val intervals = Seq((1L, 5L, 20L), (2L, 18L, 18L), (3L, 50L, 99L),
       (4L, 70L, 60L)).toDF("iid", "lo", "hi")
     // point probes
@@ -843,7 +844,7 @@ class StreamingOpsSpec extends SparkSpec {
         "p", "lo", "hi", band = 16L)
       .select("pid", "iid").as[(Long, Long)].collect().toSet
     val memP = MemoryStream[(Long, Long)]
-    val outP = StreamingTemporal.rangeMatchAtIngest(
+    val outP = Temporal.rangeJoin(
       memP.toDF().toDF("pid", "p"), intervals, "p", "lo", "hi", band = 16L)
     assert(outP.isStreaming, "the range probe must stay a streaming frame")
     val qP = outP.select("pid", "iid").writeStream.format("memory")
@@ -863,7 +864,7 @@ class StreamingOpsSpec extends SparkSpec {
       .select("sid", "iid").as[(Long, Long)].collect().toSet
     assert(batchSp.nonEmpty && !batchSp.exists(_._1 == 14L))
     val memS = MemoryStream[(Long, Long, Long)]
-    val outS = StreamingTemporal.overlapAtIngest(
+    val outS = Temporal.intervalOverlapJoin(
       memS.toDF().toDF("sid", "s_lo", "s_hi"), intervals,
       "s_lo", "s_hi", "lo", "hi", band = 16L)
     assert(outS.isStreaming, "the overlap probe must stay a streaming frame")
@@ -1817,6 +1818,26 @@ class StreamingOpsSpec extends SparkSpec {
     assert(streamed === batch)
     assert(streamed.contains(("kitten", "sitten", 1)), "cross-batch pair")
     assert(streamed.contains(("ab", "cd", 2)), "zero-shared-gram short pair")
+    // distance counts code points, as Spark's levenshtein does: one
+    // deleted emoji (two UTF-16 units) is one edit
+    val emoji = "a\uD83D\uDE00b"
+    val memCp = MemoryStream[String]
+    val qCp = StreamingDedup.fuzzyMatchAtIngest(
+        memCp.toDF().toDF("name"), "name", rarity, maxDist = 1)
+      .writeStream.format("memory").queryName("fuzzy_cp_sink")
+      .outputMode("append").start()
+    try {
+      memCp.addData(emoji); qCp.processAllAvailable()
+      memCp.addData("ab"); qCp.processAllAvailable()
+    } finally qCp.stop()
+    val streamedCp = spark.table("fuzzy_cp_sink")
+      .select("name_a", "name_b", "dist")
+      .as[(String, String, Int)].collect().toSet
+    val batchCp = Dedup.fuzzyKeyPairs(Seq(emoji, "ab").toDF("name"), "name",
+        maxDist = 1)
+      .as[(String, String, Int)].collect().toSet
+    assert(batchCp === Set(("ab", emoji, 1)))
+    assert(streamedCp === batchCp)
   }
 
   test("jaccard match at ingest: streamed docs equal the batch self-join, " +
@@ -1835,7 +1856,10 @@ class StreamingOpsSpec extends SparkSpec {
       .map(_ => words(rnd.nextInt(words.size))).mkString(" "))
     val near = base.take(5).map(t =>
       (t.split(" ").drop(1) :+ "tail").mkString(" "))
-    val all = (base ++ near).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // a document ending in whitespace: split keeps its trailing empty
+    // token, so it carries one more shingle than base(0)
+    val all = (base ++ near :+ (base(0) + " "))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val train = all.take(10).toDF("doc_id", "text") // artifact sees a SUBSET
     // through the persistence hop: the production artifact path
     val dfPath = java.nio.file.Files
@@ -1899,30 +1923,59 @@ class StreamingOpsSpec extends SparkSpec {
     val inv = graft.state.Artifacts.loadCosineInventory(spark, cosPath)
     // 'filler filler' appears in 4 corpus docs > maxDf=3: boilerplate
     assert(inv.dropped.nonEmpty, "expected a df-capped gram in the corpus")
-    val mem = MemoryStream[(Long, String)]
-    val out = StreamingSearch.cosineMatchAtIngest(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", inv,
-      minSimNum = 3, minSimDen = 10)
-    val q = out.writeStream.format("memory").queryName("cos_sink")
-      .outputMode("append").start()
     val batch1 = Seq((1L, "red fish blue fish"), (2L, "green bird yellow cat"))
     val batch2 = Seq((3L, "red fish plus totally novel content"),
       (4L, "nothing the corpus ever saw"),
-      (5L, "filler filler filler filler extra"))
-    try {
-      mem.addData(batch1: _*); q.processAllAvailable()
-      mem.addData(batch2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("cos_sink")
+      (5L, "filler filler filler filler extra"),
+      // a copy of doc 11, and a copy ending in a newline: its trailing
+      // empty token adds the corpus-unseen gram "bird ", so it is no
+      // longer an exact copy
+      (6L, "red fish blue fish green bird"),
+      (7L, "red fish blue fish green bird\n"))
+    for ((num, den) <- Seq((3, 10), (1, 1))) {
+      val mem = MemoryStream[(Long, String)]
+      val out = StreamingSearch.cosineMatchAtIngest(
+        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", inv,
+        minSimNum = num, minSimDen = den)
+      val sink = s"cos_sink_${num}_$den"
+      val q = out.writeStream.format("memory").queryName(sink)
+        .outputMode("append").start()
+      try {
+        mem.addData(batch1: _*); q.processAllAvailable()
+        mem.addData(batch2: _*); q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table(sink)
+        .as[(Long, Long)].collect().toSet
+      val batch = graft.operators.Search.cosinePairsAgainst(
+          (batch1 ++ batch2).toDF("doc_id", "text"), corpus,
+          "doc_id", "text", shingleN = 2, minSimNum = num, minSimDen = den,
+          maxDf = 3)
+        .select("new_id", "old_id").as[(Long, Long)].collect().toSet
+      assert(streamed === batch, s"minSim=$num/$den")
+      assert(!streamed.exists(_._1 == 4L), "all-unseen doc cannot match")
+      if (num == 1) {
+        assert(streamed.contains((6L, 11L)), "an exact copy matches at 1/1")
+        assert(!streamed.exists(_._1 == 7L), "the extra gram dilutes below 1/1")
+      } else assert(streamed.exists(_._1 == 1L), "close doc must match")
+    }
+  }
+
+  test("cosine match at ingest: a null text matches nothing, as in the batch operator") {
+    import graft.streaming.StreamingSearch
+    val corpus = Seq((10L, "red fish blue fish"), (11L, "green bird yellow cat"))
+      .toDF("doc_id", "text")
+    val inv = StreamingSearch.buildCosineInventory(
+      corpus, "doc_id", "text", shingleN = 2, maxDf = 3)
+    val docs = Seq((1L, "red fish blue fish"), (2L, null: String))
+      .toDF("doc_id", "text")
+    val atIngest = StreamingSearch.cosineMatchAtIngest(
+        docs, "doc_id", "text", inv, minSimNum = 3, minSimDen = 10)
       .as[(Long, Long)].collect().toSet
-    val batch = graft.operators.Search.cosinePairsAgainst(
-        (batch1 ++ batch2).toDF("doc_id", "text"), corpus,
-        "doc_id", "text", shingleN = 2, minSimNum = 3, minSimDen = 10,
-        maxDf = 3)
+    val batch = graft.operators.Search.cosinePairsAgainst(docs, corpus,
+        "doc_id", "text", shingleN = 2, minSimNum = 3, minSimDen = 10, maxDf = 3)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(streamed.exists(_._1 == 1L), "close doc must match")
-    assert(!streamed.exists(_._1 == 4L), "all-unseen doc cannot match")
+    assert(atIngest === batch)
+    assert(atIngest === Set((1L, 10L)))
   }
 
   test("components at ingest: standing families equal the full-history closure, replay-idempotent") {
@@ -2009,7 +2062,8 @@ class StreamingOpsSpec extends SparkSpec {
       (1L, "the cat sat on the cat mat"),
       (2L, "the cat sat"),
       (3L, "a dog and the cat"),
-      (4L, "the cat"))
+      (4L, "the cat"),
+      (5L, "the cat ")) // trailing whitespace: an empty token follows "cat"
     val pats = Set("the cat", "a dog")
     val mem = MemoryStream[(Long, String)]
     val counts = graft.streaming.StreamingSearch.continuationDeltasAtIngest(
@@ -2033,5 +2087,6 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(String, String, Long)].collect().toSet
     assert(got === batch)
     assert(got.contains(("the cat", "</s>", 2L)), "doc-end sentinel rows")
+    assert(got.contains(("the cat", "", 1L)), "the trailing empty token")
   }
 }

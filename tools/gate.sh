@@ -13,13 +13,14 @@
 #                                       int32-vs-BIGINT rows)
 #   4. tools/bench100x_totals.py --check   (SCALING.md derived blocks fresh)
 #   5. no .localCheckpoint( in src/main outside plans/Materialize.scala
-#   6. git status --porcelain          (tree clean apart from the staged
+#   6. no MessageDigest / .split(" in src/main/scala/graft/streaming
+#   7. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
 # Usage: tools/gate.sh [sfDir]           (default /root/testdata/sf0.01)
 #   GATE_SKIP_TESTS=1   skip step 1 (when sbt test just ran unchanged)
-#   GATE_ALLOW_DIRTY=1  demote step 5 to a warning (mid-round iteration)
+#   GATE_ALLOW_DIRTY=1  demote step 7 to a warning (mid-round iteration)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -62,6 +63,18 @@ stray="$(grep -rn '\.localCheckpoint(' src/main | grep -v '^src/main/scala/graft
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "route these through graft.plans.Materialize"
+  fail=1
+else
+  echo "ok"
+fi
+
+# at-ingest operators compute with the batch kernels (Spark's split, md5,
+# cdc_chunks, ...), so no JVM re-implementation of one may come back
+step "no JVM twins of batch kernels in graft/streaming"
+stray="$(grep -rnE 'MessageDigest|\.split\("' src/main/scala/graft/streaming)"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "compute these with the batch operator's Column expression"
   fail=1
 else
   echo "ok"
