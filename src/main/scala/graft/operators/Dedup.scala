@@ -1031,9 +1031,7 @@ object Dedup {
     // positional q-gram instances
     val bag = names
       .select(col("name"), col("len"),
-        posexplode(expr(
-          s"transform(sequence(1, greatest(len - ${q - 1}, 0)), i -> substring(name, i, $q))"))
-          .as(Seq("pos", "g")))
+        posexplode(positionalGrams(col("name"), q)).as(Seq("pos", "g")))
     // global rarity order over grams — vocabulary-of-grams sized
     val gdf = bag.groupBy("g").agg(count(lit(1)).as("gdf"))
     val pref = bag.join(gdf, Seq("g"))
@@ -1426,6 +1424,19 @@ object Dedup {
       .select("name", "canonical_name")
   }
 
+  /** The positional q-grams of `name`, cut in code points: the substrings
+    * of length q starting at 1, 2, …, len − q + 1. The one gram bag of
+    * the prefix filter ([[fuzzyPairsPrefix]]), its frozen rarity table
+    * ([[gramRarityTable]]) and the online matcher
+    * ([[graft.streaming.StreamingDedup.fuzzyMatchAtIngest]]), so the three
+    * rank the same grams. A name shorter than q yields itself twice
+    * (`sequence(1, 0)` counts down); such names also take the matchers'
+    * short paths.
+    */
+  def positionalGrams(name: Column, q: Int): Column =
+    transform(sequence(lit(1), greatest(length(name) - (q - 1), lit(0))),
+      i => substring(name, i, lit(q)))
+
   /** The frozen (gram, occurrence) → frequency artifact for ONLINE prefix
     * selection ([[graft.streaming.StreamingDedup.fuzzyMatchAtIngest]]):
     * the same positional q-gram bag [[fuzzyKeyPairs]] ranks, aggregated
@@ -1440,44 +1451,12 @@ object Dedup {
     require(q >= 1, s"need q >= 1, got $q")
     df.select(col(key).cast("string").as("name"))
       .filter(col("name").isNotNull).distinct()
-      .withColumn("len", length(col("name")))
-      .select(col("name"),
-        posexplode(expr(
-          s"transform(sequence(1, greatest(len - ${q - 1}, 0)), i -> substring(name, i, $q))"))
-          .as(Seq("pos", "g")))
+      .select(col("name"), posexplode(positionalGrams(col("name"), q)).as(Seq("pos", "g")))
       .withColumn("occ",
         row_number().over(Window.partitionBy("name", "g").orderBy("pos")))
       .groupBy("g", "occ").agg(count(lit(1)).as("gdf"))
   }
 
-  /** Sorted-neighborhood candidate pairs (Hernández & Stolfo 1995, the
-    * merge/purge method) — the third classic blocking family beside gram
-    * inventories ([[fuzzyKeyPairs]]) and deletion neighborhoods
-    * ([[fuzzyKeyPairsDeletes]]): records sort once by a blocking key and
-    * every pair within `window` positions of the GLOBAL (key, id) order
-    * becomes a candidate. Coverage is positional, not lexical — two keys
-    * with no shared gram still pair if the sort puts them near each
-    * other — and cost is strictly n·(window−1) pairs regardless of how
-    * degenerate the key distribution gets (the failure mode that blows
-    * up every inventory filter).
-    *
-    * Distributed exactly, never a single-partition sort: global
-    * positions come from [[graft.operators.SuffixArray.denseNumber]]
-    * (range exchange + per-partition window + cumulated partition-base
-    * broadcast; (key, id) is duplicate-free, so the dense rank IS the
-    * row position), then each row fans out to its `window−1` successor
-    * positions and one hash equi-join on position attaches the
-    * neighbor — correct for any partition-size distribution, including
-    * windows that would straddle several range partitions. Shuffle
-    * volume is the (window−1)-fold position fanout of (id, key) pairs —
-    * output-sized, immune to key skew (the failure mode that blows up
-    * gram inventories is irrelevant to a positional join).
-    *
-    * Output: (id_a, key_a, id_b, key_b) with (key_a, id_a) earlier in
-    * the sort order, each global pair exactly once. Verification (edit
-    * distance, Jaccard, business rules) is the caller's second stage —
-    * SNM is the candidate generator.
-    */
   /** Banded-minhash candidate RECALL against exact-Jaccard ground truth —
     * "measure, don't guess" as an operator. LSH recall at a threshold is
     * a formula under uniform-hash assumptions (1 − (1 − j^r)^b) but a
@@ -1557,6 +1536,34 @@ object Dedup {
         expr("n_found * 1000000 div greatest(n_true, 1)").as("recall_ppm"))
   }
 
+  /** Sorted-neighborhood candidate pairs (Hernández & Stolfo 1995, the
+    * merge/purge method) — the third classic blocking family beside gram
+    * inventories ([[fuzzyKeyPairs]]) and deletion neighborhoods
+    * ([[fuzzyPairsDeletes]]): records sort once by a blocking key and
+    * every pair within `window` positions of the GLOBAL (key, id) order
+    * becomes a candidate. Coverage is positional, not lexical — two keys
+    * with no shared gram still pair if the sort puts them near each
+    * other — and cost is strictly n·(window−1) pairs regardless of how
+    * degenerate the key distribution gets (the failure mode that blows
+    * up every inventory filter).
+    *
+    * Distributed exactly, never a single-partition sort: global
+    * positions come from [[graft.operators.SuffixArray.denseNumber]]
+    * (range exchange + per-partition window + cumulated partition-base
+    * broadcast; (key, id) is duplicate-free, so the dense rank IS the
+    * row position), then each row fans out to its `window−1` successor
+    * positions and one hash equi-join on position attaches the
+    * neighbor — correct for any partition-size distribution, including
+    * windows that would straddle several range partitions. Shuffle
+    * volume is the (window−1)-fold position fanout of (id, key) pairs —
+    * output-sized, immune to key skew (the failure mode that blows up
+    * gram inventories is irrelevant to a positional join).
+    *
+    * Output: (id_a, key_a, id_b, key_b) with (key_a, id_a) earlier in
+    * the sort order, each global pair exactly once. Verification (edit
+    * distance, Jaccard, business rules) is the caller's second stage —
+    * SNM is the candidate generator.
+    */
   def sortedNeighborhoodPairs(df: DataFrame, id: String, key: String,
       window: Int, buckets: Int = 0): DataFrame = {
     require(window >= 2, s"need window >= 2, got $window")

@@ -35,12 +35,6 @@ object Hints {
       .getOrElse(bytes("10MB"))
   }
 
-  /** Advisory broadcast: hint only while the optimizer's size estimate for
-    * `df` (file sizes for scans — conservative: filters don't shrink it,
-    * joins inflate it) fits under [[ThresholdConf]]. Past the threshold the
-    * frame is returned unhinted, so the planner/AQE choose a strategy from
-    * real sizes — the graceful degradation a forced hint forecloses.
-    */
   /** A single-partition Window partition key for frames that are BOUNDED
     * BY CONSTRUCTION (k centroids, a top-k pool): evaluates to 0 on every
     * row, so the window still sees one total-ordered partition, but the
@@ -55,6 +49,12 @@ object Hints {
     */
   def onePartition(anchor: Column): Column = pmod(xxhash64(anchor), lit(1L))
 
+  /** Advisory broadcast: hint only while the optimizer's size estimate for
+    * `df` (file sizes for scans — conservative: filters don't shrink it,
+    * joins inflate it) fits under [[ThresholdConf]]. Past the threshold the
+    * frame is returned unhinted, so the planner/AQE choose a strategy from
+    * real sizes — the graceful degradation a forced hint forecloses.
+    */
   def broadcastIfSmall(df: DataFrame): DataFrame = {
     val limit = thresholdBytes(df)
     if (limit > 0 &&

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{Dedup, Multimodal}
@@ -15,15 +14,18 @@ import graft.plans.Materialize
   *
   *   per-row signature (narrow, the expression form — no shuffle)
   *   → explode (band, bucket) keys
-  *   → flatMapGroupsWithState keyed by bucket: state = signatures seen in
-  *     this bucket; each new doc emits a candidate per stored signature
-  *     whose estimated Jaccard (matching-lane fraction) clears the bar
+  *   → [[StreamingState.bucketJoin]] keyed by bucket: state = signatures
+  *     seen in this bucket; each new doc emits a candidate per stored
+  *     signature whose estimated Jaccard (matching-lane fraction) clears
+  *     the bar
   *
   * State is bounded by bucket occupancy (near-dup clusters), not corpus
   * size: a doc's signature lands in `bands` buckets, and unrelated docs
   * rarely share one. The same pair can surface from several buckets —
   * exactly-once pair emission would need a second stateful dedup; route
   * candidates through `dropDuplicates` downstream or dedup at the sink.
+  * A re-delivered doc id is absorbed (the bucket keeps its first copy),
+  * so a replayed record neither re-emits its pairs nor grows its buckets.
   */
 object StreamingDedup {
 
@@ -43,27 +45,14 @@ object StreamingDedup {
       .withColumn("bk", explode(Dedup.lshBandKeys(col("sig"), bands, r)))
       .select(col("bk.band"), col("bk.bucket"), col("doc_id"), col("sig"))
       .as[(Int, Long, Long, Seq[Long])]
-
-    keyed.groupByKey(x => (x._1, x._2))
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], Candidate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(Nil)
-          val out = Seq.newBuilder[Candidate]
-          rows.foreach { case (_, _, docId, docSig) =>
-            seen.foreach { case (prevId, prevSig) =>
-              if (prevId != docId) {
-                val est = prevSig.iterator.zip(docSig.iterator)
-                  .count { case (a, b) => a == b }.toDouble / docSig.size
-                if (est >= minEstJaccard)
-                  out += Candidate(math.min(prevId, docId), math.max(prevId, docId), est)
-              }
-            }
-            seen = (docId, docSig) :: seen
-          }
-          state.update(seen)
-          out.result().iterator
-      }
+      .map { case (band, bucket, docId, docSig) => ((band, bucket), (docId, docSig)) }
+    StreamingState.bucketJoin(keyed)(_._1) {
+      case ((docId, docSig), (prevId, prevSig)) =>
+        val est = prevSig.iterator.zip(docSig.iterator)
+          .count { case (a, b) => a == b }.toDouble / docSig.size
+        Option.when(est >= minEstJaccard)(
+          Candidate(math.min(prevId, docId), math.max(prevId, docId), est))
+    }
   }
 
   final case class LineOut(doc_id: Long, pos: Int, line: String, keep: Boolean)
@@ -78,11 +67,13 @@ object StreamingDedup {
     * from its kept lines within the same micro-batch (no cross-batch doc
     * state needed; see the spec).
     *
-    * State is one boolean per DISTINCT line — the persistable form of the
-    * batch operator's first-occurrence table, partitioned by digest hash
-    * across executors. Equals the batch operator when ids arrive in
-    * ascending order (the ingest contract; out-of-order arrival resolves
-    * by arrival time, which is the streaming-correct answer).
+    * State is one boolean per DISTINCT line ([[StreamingState.firstSeen]])
+    * — the persistable form of the batch operator's first-occurrence
+    * table, partitioned by digest hash across executors. Blank means
+    * `trim(line) = ''`, the batch operator's test. Equals the batch
+    * operator when ids arrive in ascending order (the ingest contract;
+    * out-of-order arrival resolves by arrival time, which is the
+    * streaming-correct answer).
     */
   def lineDedupAtIngest(docs: DataFrame, id: String, text: String,
       sep: String = "\n"): Dataset[LineOut] = {
@@ -92,23 +83,12 @@ object StreamingDedup {
       .select(col(id).cast("long").as("doc_id"),
         posexplode(split(col(text), java.util.regex.Pattern.quote(sep)))
           .as(Seq("pos", "line")))
-      .select(md5(col("line")).as("h"), col("doc_id"), col("pos"), col("line"))
-      .as[(String, Long, Int, String)]
-    lines.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, LineOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(false)
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, docId, pos, line) =>
-              val blank = line.trim.isEmpty
-              val keep = blank || !seen
-              if (!blank && !seen) seen = true
-              LineOut(docId, pos, line, keep)
-          }
-          if (seen) state.update(true)
-          out.iterator
-      }
+      .select(md5(col("line")).as("h"), col("doc_id"), col("pos"), col("line"),
+        (trim(col("line")) === "").as("blank"))
+      .as[(String, Long, Int, String, Boolean)]
+    StreamingState.firstSeen(lines)(_._1, r => (r._2, r._3), _._5) {
+      (r, keep) => LineOut(r._2, r._3, r._4, keep)
+    }
   }
 
   final case class ChunkOut(media_id: Long, chunk_no: Long, start: Long,
@@ -120,7 +100,7 @@ object StreamingDedup {
     * expression — CDC boundaries are a pure function of the bytes, so the
     * chunking is narrow, with no shuffle and no state), then every chunk
     * digest is classified against all chunks EVER seen via
-    * flatMapGroupsWithState keyed by digest. `is_new = true` means
+    * [[StreamingState.firstSeen]] keyed by digest. `is_new = true` means
     * "store this block" — the content-addressable-store question a
     * dedup ingest tier answers per record. First occurrence wins by
     * (media_id, chunk_no) within a batch and by arrival across batches;
@@ -139,20 +119,9 @@ object StreamingDedup {
       .select(col("chunk_md5"), col("media_id"), col("chunk_no"),
         col("start"), col("chunk_len"))
       .as[(String, Long, Long, Long, Long)]
-    chunks.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, ChunkOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(false)
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (h, mid, no, st, ln) =>
-              val isNew = !seen
-              seen = true
-              ChunkOut(mid, no, st, ln, h, isNew)
-          }
-          state.update(true)
-          out.iterator
-      }
+    StreamingState.firstSeen(chunks)(_._1, r => (r._2, r._3), _ => false) {
+      case ((h, mid, no, st, ln), isNew) => ChunkOut(mid, no, st, ln, h, isNew)
+    }
   }
 
   final case class FuzzyMatch(name_a: String, name_b: String, dist: Int)
@@ -163,20 +132,22 @@ object StreamingDedup {
     * mirrors [[nearDupCandidates]]: per arriving name the k·q+1 rarest
     * positional q-grams under a FROZEN rarity order
     * ([[Dedup.gramRarityTable]], collected once — vocabulary-sized by
-    * construction) become the bucket keys; flatMapGroupsWithState keyed
-    * by (gram, occ) holds the names seen in that bucket and verifies
-    * exact Levenshtein against each with Spark's `levenshtein` kernel
-    * (`UTF8String.levenshteinDistance`, counting code points). The
-    * prefix-filter completeness proof needs only a consistent total
-    * order, so the frozen artifact finds every true pair among ALL
-    * streamed names (unseen grams rank as frequency 0 — rarest, which
-    * only strengthens the prefix).
+    * construction) become the bucket keys; the grams are the batch
+    * operator's own [[Dedup.positionalGrams]] column, cut in code points.
+    * [[StreamingState.bucketJoin]] keyed by (gram, occ) holds the names
+    * seen in that bucket and verifies exact Levenshtein against each with
+    * Spark's `levenshtein` kernel (`UTF8String.levenshteinDistance`,
+    * counting code points). The prefix-filter completeness proof needs
+    * only a consistent total order, so the frozen artifact finds every
+    * true pair among ALL streamed names (unseen grams rank as frequency
+    * 0 — rarest, which only strengthens the prefix).
     * Names short enough to share zero grams with a true partner
-    * (len ≤ q·(k+1)-1+k) additionally route through one dedicated short
-    * bucket — the online analogue of the batch short pool, population
-    * alphabet-bounded. A pair sharing several buckets can emit more than
+    * (code-point len ≤ q·(k+1)-1+k) additionally route through one
+    * dedicated short bucket — the online analogue of the batch short
+    * pool, population alphabet-bounded. A pair sharing several buckets can emit more than
     * once — dedup downstream (the [[nearDupCandidates]] caveat).
-    * Duplicate arrivals of a name are absorbed (state keeps one copy).
+    * Duplicate arrivals of a name are absorbed (state keeps one copy), and
+    * in-batch folds run in ascending name order.
     */
   def fuzzyMatchAtIngest(names: DataFrame, key: String,
       rarity: Map[(String, Int), Long], maxDist: Int,
@@ -188,42 +159,24 @@ object StreamingDedup {
     val prefixLen = maxDist * q + 1
     val shortCut = q * (maxDist + 1) - 1 + maxDist
     val keyed = names.select(col(key).cast("string").as("n"))
-      .filter(col("n").isNotNull).as[String]
-      .flatMap { n =>
-        val grams = (0 to n.length - q).map(i => n.substring(i, i + q))
+      .filter(col("n").isNotNull)
+      .select(col("n"), Dedup.positionalGrams(col("n"), q), length(col("n")))
+      .as[(String, Seq[String], Int)]
+      .flatMap { case (n, grams, len) =>
         val withOcc = grams.zipWithIndex.map { case (g, i) =>
           (g, grams.take(i).count(_ == g) + 1)
         }
         val prefix = withOcc
           .sortBy { case (g, o) => (rarity.getOrElse((g, o), 0L), g, o) }
           .take(prefixLen)
-        val short =
-          if (n.length <= shortCut) Seq(("", 0)) else Nil
-        (prefix ++ short).map { case (g, o) => (g, o, n) }
+        val short = if (len <= shortCut) Seq(("", 0)) else Nil
+        (prefix ++ short).map((_, n))
       }
-    keyed.groupByKey(x => (x._1, x._2))
-      .flatMapGroupsWithState[List[String], FuzzyMatch](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(Nil)
-          val out = Seq.newBuilder[FuzzyMatch]
-          // ascending-name fold: deterministic across retries, as in
-          // StreamingSimilarity.semDedupAtIngest
-          rows.map(_._3).toSeq.distinct.sorted.foreach { n =>
-            if (!seen.contains(n)) {
-              val un = UTF8String.fromString(n)
-              seen.foreach { m =>
-                val d = un.levenshteinDistance(UTF8String.fromString(m))
-                if (d <= maxDist)
-                  out += FuzzyMatch(
-                    if (n < m) n else m, if (n < m) m else n, d)
-              }
-              seen = n :: seen
-            }
-          }
-          state.update(seen)
-          out.result().iterator
-      }
+    StreamingState.bucketJoin(keyed)(identity) { (n, m) =>
+      val d = UTF8String.fromString(n).levenshteinDistance(UTF8String.fromString(m))
+      Option.when(d <= maxDist)(
+        FuzzyMatch(if (n < m) n else m, if (n < m) m else n, d))
+    }
   }
 
   final case class JaccardMatch(new_id: Long, old_id: Long,
@@ -237,9 +190,9 @@ object StreamingDedup {
     *
     * Per arriving doc, the (s − ⌈τs⌉ + 1) rarest distinct shingle
     * fingerprints under a FROZEN rarity artifact become the bucket keys
-    * (AllPairs prefix, Bayardo WWW'07); flatMapGroupsWithState keyed by
-    * fingerprint holds each bucket's (doc, sorted fingerprint array)
-    * members and verifies exact intersection against each, gated by the
+    * (AllPairs prefix, Bayardo WWW'07); [[StreamingState.bucketJoin]]
+    * keyed by fingerprint holds each bucket's (doc, sorted fingerprint
+    * array) members and verifies exact intersection against each, gated by the
     * τ-compatible size band. Completeness needs only a CONSISTENT total
     * gram order — the [[Dedup.jaccardPairsAgainst]] frozen-order
     * argument — so the artifact may be head-capped to the most frequent
@@ -276,31 +229,18 @@ object StreamingDedup {
         val prefLen = s - (s * minNum + minDen - 1) / minDen + 1
         fps.sortBy(g => (rarity.getOrElse(g, 0L), g))
           .take(prefLen)
-          .map(g => (g, i, fps))
+          .map(g => (g, (i, fps)))
       }
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Long, Array[Long])], JaccardMatch](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(Nil)
-          val out = Seq.newBuilder[JaccardMatch]
-          rows.toSeq.sortBy(_._2).foreach { case (_, i, fps) =>
-            if (!seen.exists(_._1 == i)) {
-              val sN = fps.length.toLong
-              seen.foreach { case (j, fpsJ) =>
-                val sO = fpsJ.length.toLong
-                if (minNum * math.max(sN, sO) <= minDen * math.min(sN, sO)) {
-                  val c = sortedIntersectCount(fps, fpsJ)
-                  if (minDen * c >= minNum * (sN + sO - c))
-                    out += JaccardMatch(i, j, c, sN, sO)
-                }
-              }
-              seen = (i, fps) :: seen
-            }
-          }
-          state.update(seen)
-          out.result().iterator
+    StreamingState.bucketJoin(keyed)(_._1) { case ((i, fps), (j, fpsJ)) =>
+      val sN = fps.length.toLong
+      val sO = fpsJ.length.toLong
+      // the τ-compatible size band gates the intersection walk
+      if (minNum * math.max(sN, sO) > minDen * math.min(sN, sO)) None
+      else {
+        val c = sortedIntersectCount(fps, fpsJ)
+        Option.when(minDen * c >= minNum * (sN + sO - c))(JaccardMatch(i, j, c, sN, sO))
       }
+    }
   }
 
   /** Per-doc n-gram novelty at ingest — the EXACT streaming twin of

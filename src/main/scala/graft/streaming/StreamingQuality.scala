@@ -193,19 +193,6 @@ object StreamingQuality {
       .agg(expr(s"bloom_agg(g, $numBits, $k)").as("bf"))
       .head().getAs[Array[Byte]]("bf")
 
-  /** PPS weighted sample at ingest — the streaming twin of
-    * [[graft.operators.Corpus.samplePps]]: the corpus total weight is a
-    * FROZEN batch artifact (yesterday's `sum(weight)`, refreshed on
-    * whatever cadence the mix is re-audited), so the membership test is a
-    * stateless narrow filter — no aggregation inside the stream, no state
-    * store, append-safe. The test and the Horvitz–Thompson weight are the
-    * SAME definitions the batch form uses (`Corpus.ppsKeep` / `ppsHt`),
-    * so a key admitted at ingest is exactly the key the batch sample
-    * admits at the same frozen total — the two cannot drift. As the live
-    * corpus grows past the frozen total, the realized rate runs
-    * proportionally hot until the artifact is refreshed (the same
-    * advisory-artifact contract as [[percentileGateAtIngest]]).
-    */
   /** DSIR importance weights at ingest — the streaming twin of
     * [[graft.operators.Corpus.dsirWeights]]: the batch-trained bucket
     * ratio table ([[graft.operators.Corpus.dsirRatioTable]] — frozen
@@ -231,18 +218,26 @@ object StreamingQuality {
     val ratioMap = ratioTable.agg(
       map_from_entries(collect_list(struct(col("_b"), col("_r")))).as("_ds_map"))
     docs.crossJoin(broadcast(ratioMap))
-      .withColumn("_ds_toks", split(lower(col(text)), "\\s+"))
       .withColumn("ds_weight", greatest(lit(1L),
-        when(size(col("_ds_toks")) >= n,
-          aggregate(sequence(lit(0), size(col("_ds_toks")) - n), lit(0L),
-            (acc, i) => acc + coalesce(
-              element_at(col("_ds_map"), Corpus.dsirBucket(
-                concat_ws(" ", slice(col("_ds_toks"), i + 1, lit(n))), buckets)),
-              lit(0L))))
-          .otherwise(lit(0L))))
-      .drop("_ds_toks", "_ds_map")
+        aggregate(Corpus.ngrams(col(text), n), lit(0L),
+          (acc, g) => acc + coalesce(
+            element_at(col("_ds_map"), Corpus.dsirBucket(g, buckets)), lit(0L)))))
+      .drop("_ds_map")
   }
 
+  /** PPS weighted sample at ingest — the streaming twin of
+    * [[graft.operators.Corpus.samplePps]]: the corpus total weight is a
+    * FROZEN batch artifact (yesterday's `sum(weight)`, refreshed on
+    * whatever cadence the mix is re-audited), so the membership test is a
+    * stateless narrow filter — no aggregation inside the stream, no state
+    * store, append-safe. The test and the Horvitz–Thompson weight are the
+    * SAME definitions the batch form uses (`Corpus.ppsKeep` / `ppsHt`),
+    * so a key admitted at ingest is exactly the key the batch sample
+    * admits at the same frozen total — the two cannot drift. As the live
+    * corpus grows past the frozen total, the realized rate runs
+    * proportionally hot until the artifact is refreshed (the same
+    * advisory-artifact contract as [[percentileGateAtIngest]]).
+    */
   def samplePpsAtIngest(rows: DataFrame, key: Column, weight: Column,
       expected: Int, totalWeight: Long): DataFrame = {
     require(expected > 0, s"need expected > 0, got $expected")

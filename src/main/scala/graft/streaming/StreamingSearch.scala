@@ -156,17 +156,25 @@ object StreamingSearch {
     * batches — the emission is a stateless narrow map per record, so
     * counts are invariant to arrival order, batching, and retry
     * (spec-pinned stream≡batch). A null text emits nothing, as the batch
-    * operator skips it. The batch operator's SA index answers
-    * ARBITRARY patterns over a frozen corpus; this path keeps a bounded
-    * watched set's continuation distribution live as data lands.
+    * operator skips it. Each pattern is keyed by its first n tokens
+    * under the batch tokenization (`Corpus.ngrams`: lowercased,
+    * whitespace split), so "The Cat" watches "the cat"; a pattern of
+    * fewer than n tokens never matches. Rows carry the original pattern
+    * string. The batch operator's SA index answers ARBITRARY patterns
+    * over a frozen corpus; this path keeps a bounded watched set's
+    * continuation distribution live as data lands.
     */
   def continuationDeltasAtIngest(docs: DataFrame, id: String, text: String,
       patterns: Set[String], n: Int): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val watched = patterns.toSeq.toDF("pattern")
+      .select(col("pattern"), explode(slice(Corpus.ngrams(col("pattern"), n), 1, 1)).as("_ctK"))
     val toks = split(lower(col(text)), "\\s+")
     docs.select(toks.as("_ctT"),
-        posexplode(Corpus.ngrams(col(text), n)).as(Seq("_ctO", "pattern")))
-      .filter(col("pattern").isin(patterns.toSeq: _*))
+        posexplode(Corpus.ngrams(col(text), n)).as(Seq("_ctO", "_ctK")))
+      .join(broadcast(watched), "_ctK")
       .select(col("pattern"),
         when(col("_ctO") + n < size(col("_ctT")),
           element_at(col("_ctT"), col("_ctO") + n + 1))

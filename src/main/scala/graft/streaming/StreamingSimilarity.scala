@@ -13,12 +13,14 @@ import graft.operators.Similarity
   * by a batch job.
   *
   * Topology mirrors [[StreamingDedup]]: native `rhp_buckets` signature per
-  * row (narrow) → explode (table, bucket) keys → flatMapGroupsWithState
-  * keyed by bucket, state = vectors seen in that bucket; an arriving
-  * vector emits a match per stored vector whose exact cosine clears the
-  * threshold. State scales with bucket occupancy (vectors hashing alike),
-  * not corpus size; a pair sharing several buckets can emit more than
-  * once — dedup downstream.
+  * row (narrow) → explode (table, bucket) keys →
+  * [[StreamingState.bucketJoin]] keyed by bucket, state = vectors seen in
+  * that bucket; an arriving vector emits a match per stored vector whose
+  * exact cosine clears the threshold. State scales with bucket occupancy
+  * (vectors hashing alike), not corpus size; a pair sharing several
+  * buckets can emit more than once — dedup downstream. A re-delivered
+  * vector id is absorbed (the bucket keeps its first copy), so a replayed
+  * record neither re-emits its matches nor grows its buckets.
   */
 object StreamingSimilarity {
 
@@ -35,26 +37,11 @@ object StreamingSimilarity {
       .withColumn("bk", explode(Similarity.lshKeys(col("v"), tables, bits, dim)))
       .select(col("bk.tbl"), col("bk.bucket"), col("vid"), col("v"))
       .as[(Int, Int, Long, Array[Float])]
-
-    keyed.groupByKey(x => (x._1, x._2))
-      .flatMapGroupsWithState[List[(Long, Array[Float])], Match](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var seen = state.getOption.getOrElse(Nil)
-          val out = Seq.newBuilder[Match]
-          rows.foreach { case (_, _, vid, v) =>
-            seen.foreach { case (pid, pv) =>
-              if (pid != vid) {
-                val cos = CosineSimilarity.cosine(pv.length, pv(_), v.length, v(_))
-                if (cos >= minCosine)
-                  out += Match(math.min(pid, vid), math.max(pid, vid), cos)
-              }
-            }
-            seen = (vid, v) :: seen
-          }
-          state.update(seen)
-          out.result().iterator
-      }
+      .map { case (tbl, bucket, vid, v) => ((tbl, bucket), (vid, v)) }
+    StreamingState.bucketJoin(keyed)(_._1) { case ((vid, v), (pid, pv)) =>
+      val cos = CosineSimilarity.cosine(pv.length, pv(_), v.length, v(_))
+      Option.when(cos >= minCosine)(Match(math.min(pid, vid), math.max(pid, vid), cos))
+    }
   }
 
   final case class Admission(vec_id: Long, cell: Int, kept: Boolean)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Keyed record shape for streaming state ops: the reference's decoded
   * (key, value) pair plus an arrival order (`/root/reference/data/
@@ -146,6 +146,67 @@ object StreamingState {
     df.withWatermark(eventTime, delay)
       .groupBy((window(col(eventTime), windowLen) +: groupCols.map(col)).toIndexedSeq: _*)
       .agg(count(lit(1)).as("n"))
+
+  /** Online bucketed self-join: the one state fold behind every
+    * "does this arriving record match one we already hold?" operator
+    * (near-dup MinHash buckets, LSH vector buckets, fuzzy gram buckets,
+    * Jaccard prefix buckets). Rows group by their bucket key `_1`; the
+    * state is the list of members `_2` stored under that key. Each
+    * micro-batch folds the group's members in ascending `id` order, so a
+    * retry or a repartitioning decides the same way. A member whose id is
+    * already stored, or appeared earlier in the same batch, is absorbed:
+    * no verify, no store, so a re-delivered record re-emits nothing. Any
+    * other member is checked with `verify(arriving, stored)` against every
+    * stored member, then stored. A pair sharing several buckets emits once
+    * per shared bucket; dedup downstream when exactly-once pairs matter.
+    */
+  def bucketJoin[K: Encoder, M, I: Ordering, Out: Encoder](
+      keyed: Dataset[(K, M)])(id: M => I)(verify: (M, M) => Option[Out])(
+      implicit stored: Encoder[List[M]]): Dataset[Out] =
+    keyed.groupByKey(_._1)
+      .flatMapGroupsWithState[List[M], Out](OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (_, rows, state) =>
+          var seen = state.getOption.getOrElse(Nil)
+          val out = Seq.newBuilder[Out]
+          rows.map(_._2).toSeq.sortBy(id).foreach { m =>
+            val i = id(m)
+            if (!seen.exists(s => id(s) == i)) {
+              seen.foreach(s => out ++= verify(m, s))
+              seen = m :: seen
+            }
+          }
+          state.update(seen)
+          out.result().iterator
+      }
+
+  /** Digest-keyed first-occurrence flag: the one state fold behind the
+    * "have we ever seen this content?" operators (line and chunk dedup at
+    * ingest). Rows group by `key`; the state is one Boolean per key. Each
+    * micro-batch folds the group's rows in ascending `order` (the
+    * (id, position) of the row), so across batches the first arrival
+    * wins and within one the smallest (id, position) does. The first
+    * non-`exempt` row of a key is new; an exempt row (a blank line) is
+    * always flagged new and never marks the key. `emit(row, isNew)` builds
+    * the one output row per input row.
+    */
+  def firstSeen[R, K: Encoder, O: Ordering, Out: Encoder](
+      rows: Dataset[R])(key: R => K, order: R => O, exempt: R => Boolean)(
+      emit: (R, Boolean) => Out): Dataset[Out] = {
+    import rows.sparkSession.implicits._
+    rows.groupByKey(key)
+      .flatMapGroupsWithState[Boolean, Out](OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (_, group, state) =>
+          var seen = state.getOption.getOrElse(false)
+          val out = group.toSeq.sortBy(order).map { r =>
+            val ex = exempt(r)
+            val isNew = ex || !seen
+            if (!ex) seen = true
+            emit(r, isNew)
+          }
+          if (seen) state.update(true)
+          out.iterator
+      }
+  }
 
   /** J3 with the reference's EXACT buffer semantics (join/side_joiner.go:
     * 54-97, join/window.go:5-28): per key, each side holds a single-slot

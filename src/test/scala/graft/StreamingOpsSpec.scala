@@ -535,6 +535,13 @@ class StreamingOpsSpec extends SparkSpec {
         (3L, "the quick brown fox jumps over the lazy cat today"), // near-dup of 1
         (4L, "yet another unrelated text body mentioning parquet files"))
       q.processAllAvailable()
+      val emitted = spark.table("neardup_sink").count()
+      // a replayed record: its id is already stored in every bucket it
+      // hashes to, so it is absorbed and re-emits nothing
+      mem.addData((3L, "the quick brown fox jumps over the lazy cat today"))
+      q.processAllAvailable()
+      assert(spark.table("neardup_sink").count() === emitted,
+        "a re-delivered doc re-emitted its pairs")
     } finally q.stop()
     val pairs = spark.table("neardup_sink")
       .select("a_id", "b_id").distinct()
@@ -551,8 +558,10 @@ class StreamingOpsSpec extends SparkSpec {
     try {
       mem.addData((1L, "alpha\nshared\n\nbeta"))
       q.processAllAvailable()
-      // batch 2: 'shared' was seen in batch 1 → drops; 'gamma' is new
-      mem.addData((2L, "shared\ngamma"), (3L, "shared"))
+      // batch 2: 'shared' was seen in batch 1 → drops; 'gamma' is new; a
+      // tab-only line is not blank to the batch operator's trim, so its
+      // repeat drops too
+      mem.addData((2L, "shared\ngamma\n\t"), (3L, "shared\n\t"))
       q.processAllAvailable()
     } finally q.stop()
     val sink = spark.table("linededup_sink")
@@ -565,7 +574,7 @@ class StreamingOpsSpec extends SparkSpec {
           .getField("line")).as("text_dedup"))
       .as[(Long, String)].collect().toMap
     val batch = graft.operators.Dedup.lineDedup(
-      Seq((1L, "alpha\nshared\n\nbeta"), (2L, "shared\ngamma"), (3L, "shared"))
+      Seq((1L, "alpha\nshared\n\nbeta"), (2L, "shared\ngamma\n\t"), (3L, "shared\n\t"))
         .toDF("doc_id", "text"), "doc_id", "text")
       .select("doc_id", "text_dedup").as[(Long, String)].collect().toMap
     assert(rebuilt.getOrElse(3L, "") === batch(3L))
@@ -624,6 +633,11 @@ class StreamingOpsSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData((3L, Seq(1f, 0.01f, 0f, 0f))) // near-identical to 1
       q.processAllAvailable()
+      val emitted = spark.table("simmatch_sink").count()
+      mem.addData((3L, Seq(1f, 0.01f, 0f, 0f))) // replayed: absorbed
+      q.processAllAvailable()
+      assert(spark.table("simmatch_sink").count() === emitted,
+        "a re-delivered vector re-emitted its matches")
     } finally q.stop()
     val pairs = spark.table("simmatch_sink")
       .select("a_id", "b_id").distinct().as[(Long, Long)].collect().toSet
@@ -1838,6 +1852,30 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(String, String, Int)].collect().toSet
     assert(batchCp === Set(("ab", emoji, 1)))
     assert(streamedCp === batchCp)
+    // candidate grams are cut in code points, as the rarity artifact's:
+    // "a😀bcdef" keeps the shared gram "bc" in its 3-gram prefix, where
+    // UTF-16 halves of the emoji would crowd it out; both names are too
+    // long for the short bucket
+    val long = "a\uD83D\uDE00bcdef"
+    val rarityCp = graft.state.Artifacts.collectGramRarity(Dedup.gramRarityTable(
+      Seq("bcdef", "bcdefg", "xbcdef", "abcdef").toDF("name"), "name", q = 2))
+    val memLong = MemoryStream[String]
+    val qLong = StreamingDedup.fuzzyMatchAtIngest(
+        memLong.toDF().toDF("name"), "name", rarityCp, maxDist = 1)
+      .writeStream.format("memory").queryName("fuzzy_cp_long_sink")
+      .outputMode("append").start()
+    try {
+      memLong.addData(long); qLong.processAllAvailable()
+      memLong.addData("abcdef"); qLong.processAllAvailable()
+    } finally qLong.stop()
+    val streamedLong = spark.table("fuzzy_cp_long_sink")
+      .select("name_a", "name_b", "dist")
+      .as[(String, String, Int)].collect().toSet
+    val batchLong = Dedup.fuzzyKeyPairs(Seq(long, "abcdef").toDF("name"), "name",
+        maxDist = 1)
+      .as[(String, String, Int)].collect().toSet
+    assert(batchLong === Set(("abcdef", long, 1)))
+    assert(streamedLong === batchLong)
   }
 
   test("jaccard match at ingest: streamed docs equal the batch self-join, " +
@@ -2063,8 +2101,11 @@ class StreamingOpsSpec extends SparkSpec {
       (2L, "the cat sat"),
       (3L, "a dog and the cat"),
       (4L, "the cat"),
-      (5L, "the cat ")) // trailing whitespace: an empty token follows "cat"
-    val pats = Set("the cat", "a dog")
+      (5L, "the cat "), // trailing whitespace: an empty token follows "cat"
+      (6L, "The cat ran"))
+    // patterns tokenize as the corpus does: "The Cat" watches "the cat";
+    // "cat" has fewer than n tokens and never matches
+    val pats = Set("the cat", "a dog", "The Cat", "cat")
     val mem = MemoryStream[(Long, String)]
     val counts = graft.streaming.StreamingSearch.continuationDeltasAtIngest(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text", pats, n = 2)
@@ -2087,6 +2128,8 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(String, String, Long)].collect().toSet
     assert(got === batch)
     assert(got.contains(("the cat", "</s>", 2L)), "doc-end sentinel rows")
+    assert(got.contains(("The Cat", "ran", 1L)), "a pattern is lowercased")
+    assert(!got.exists(_._1 == "cat"), "a pattern shorter than n matches")
     assert(got.contains(("the cat", "", 1L)), "the trailing empty token")
   }
 }

@@ -13,7 +13,8 @@
 #                                       int32-vs-BIGINT rows)
 #   4. tools/bench100x_totals.py --check   (SCALING.md derived blocks fresh)
 #   5. no .localCheckpoint( in src/main outside plans/Materialize.scala
-#   6. no MessageDigest / .split(" in src/main/scala/graft/streaming
+#   6. no MessageDigest / .split(" / .substring( in
+#      src/main/scala/graft/streaming
 #   7. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
@@ -71,7 +72,7 @@ fi
 # at-ingest operators compute with the batch kernels (Spark's split, md5,
 # cdc_chunks, ...), so no JVM re-implementation of one may come back
 step "no JVM twins of batch kernels in graft/streaming"
-stray="$(grep -rnE 'MessageDigest|\.split\("' src/main/scala/graft/streaming)"
+stray="$(grep -rnE 'MessageDigest|\.split\("|\.substring\(' src/main/scala/graft/streaming)"
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "compute these with the batch operator's Column expression"
