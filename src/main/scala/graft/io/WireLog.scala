@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * Log layout: flat parquet files `seg-NNNNNN-*.parquet` under `dir`; one
   * [[append]] = one segment = one micro-batch on replay (the file source
   * delivers files oldest-first; `maxFilesPerTrigger=1` pins the
-  * batch=segment equivalence). Offsets are contiguous per
+  * one-segment-per-batch equivalence). Offsets are contiguous per
   * (topic, partition) across segments — exactly a broker partition's log —
   * assigned with a per-partition `row_number` continued from the log's
   * current end offsets (a ≤#partitions-row bounded read, never data-sized
@@ -122,23 +122,9 @@ object WireLog {
       .withColumn("offset", coalesce(col("_end"), lit(-1L)) + col("_rn"))
       .select(recordSchema.fieldNames.map(col).toIndexedSeq: _*)
 
-    // stage → move: spark writes a directory; the log wants flat,
-    // lexicographically-ordered segment files so replay order is stable
     val logDir = Paths.get(dir)
     Files.createDirectories(logDir)
-    val segNo = segmentFiles(logDir).size
-    val staging = Files.createTempDirectory(logDir, ".staging")
-    try {
-      numbered.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val parts = Files.list(staging).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        Files.move(p, logDir.resolve(f"seg-$segNo%06d-$i%03d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-    } finally {
-      Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
+    publishSegment(numbered, logDir, replace = false)
   }
 
   /** Batch read of the whole log in the full record schema (empty log ⇒
@@ -200,16 +186,28 @@ object WireLog {
       // broker keeps the log-end offset the same way)
       .filter(col("value").isNotNull || col("offset") === col("_end"))
       .select(recordSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val logDir = Paths.get(dir)
-    val staging = Files.createTempDirectory(logDir, ".compact")
+    publishSegment(latest, Paths.get(dir), replace = true)
+  }
+
+  /** Stage → move: Spark writes a directory; the log wants flat,
+    * lexicographically-ordered segment files so replay order is stable.
+    * `frame` is written as one `coalesce(1)` job into a staging dir under
+    * `logDir`, and its part files move in, in name order, as the next
+    * segment. `replace` (compaction's swap) deletes every old segment
+    * once the write has succeeded and publishes the new generation as
+    * segment 0. The staging dir is removed either way.
+    */
+  private def publishSegment(frame: DataFrame, logDir: Path,
+      replace: Boolean): Unit = {
+    val segNo = if (replace) 0 else segmentFiles(logDir).size
+    val staging = Files.createTempDirectory(logDir, ".staging")
     try {
-      latest.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      frame.coalesce(1).write.mode("overwrite").parquet(staging.toString)
       val parts = Files.list(staging).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-      // swap: old segments out, the compacted generation in as seg 0
-      segmentFiles(logDir).foreach(Files.delete(_))
+      if (replace) segmentFiles(logDir).foreach(Files.delete(_))
       parts.zipWithIndex.foreach { case (p, i) =>
-        Files.move(p, logDir.resolve(f"seg-${0}%06d-$i%03d.parquet"),
+        Files.move(p, logDir.resolve(f"seg-$segNo%06d-$i%03d.parquet"),
           StandardCopyOption.ATOMIC_MOVE)
       }
     } finally {

@@ -411,10 +411,10 @@ object Dedup {
       .distinct()
 
   /** [[noveltyReport]] against a pre-built (usually persisted) inventory —
-    * the form both the per-release batch triage and the at-ingest
-    * streaming twin ([[graft.streaming.StreamingDedup.noveltyAtIngest]])
-    * execute: batch-sided left join on the gram hash + one per-doc agg;
-    * inventory rows never reshuffle per batch.
+    * the form both the per-release batch triage and the at-ingest door
+    * check (this call inside `writeStream.foreachBatch`) execute:
+    * batch-sided left join on the gram hash + one per-doc agg; inventory
+    * rows never reshuffle per batch.
     */
   def noveltyReportAgainst(newDocs: DataFrame, inventory: DataFrame,
       id: String, text: String, shingleN: Int): DataFrame = {

@@ -55,12 +55,29 @@ object Artifacts {
   }
 
   // ------------------------------------------------------------------
-  // Versioned micro-batch artifacts (the StreamingGraph foreachBatch
-  // idiom: `<dir>/<prefix>=N` slices, idempotent per batch id, pre-state
-  // = the latest version BELOW the current id so a replayed batch
-  // re-derives from the same pre-state — exactly-once without a
-  // transactional store)
+  // Versioned micro-batch artifacts (the foreachBatch harness idiom of
+  // StreamingGraph and StreamingCorpus: a `<dir>/batch=N` slice log and
+  // `<dir>/v=N` versions, idempotent per batch id, pre-state = the
+  // latest version BELOW the current id so a replayed batch re-derives
+  // from the same pre-state — exactly-once without a transactional
+  // store). This section is the one place that spells the layout.
   // ------------------------------------------------------------------
+
+  /** Write batch `batchId`'s slice of the log under `dir`. Overwrite: a
+    * replayed batch id rewrites its own slice, never duplicates it.
+    */
+  def writeSlice(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+
+  /** Batch `batchId`'s slice alone, as [[writeSlice]] left it. */
+  def readSlice(spark: SparkSession, dir: String, batchId: Long): DataFrame =
+    spark.read.parquet(s"$dir/batch=$batchId")
+
+  /** Write version `batchId` of the versioned artifact under `dir`.
+    * Overwrite: a replayed batch id re-derives the same version.
+    */
+  def writeVersion(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
 
   /** The numeric versions present under `dir` with the given layout
     * prefix (`v` or `batch`). Listed through the Hadoop FileSystem API,
@@ -85,7 +102,7 @@ object Artifacts {
     * (a running base — next position, running token total). This is all
     * that crosses an at-ingest operator's single-writer tail; every
     * per-record computation stays distributed in the batch operator the
-    * ledger parameterizes (`StreamingCorpus.ingestIcpBatch` etc.).
+    * ledger parameterizes (`StreamingCorpus.icpAttachAtIngest` etc.).
     *
     * Written through the Hadoop FS API, not a Spark job — one long is a
     * listing-sized metadata op (the `listVersions` discipline), and a
@@ -121,18 +138,12 @@ object Artifacts {
     * directory with no committed data (no `_SUCCESS`). Only the NEWEST
     * version can be torn — every earlier batch committed before the
     * stream advanced — so this read takes the newest COMPLETE version
-    * and IGNORES markerless directories outright: every writer (the old
-    * parquet-job form via Spark's committer, the current raw-FS form
-    * explicitly) commits a `_SUCCESS`, so a marker-free `v=N` can only
-    * be a torn write, and parsing its `value` file could silently
+    * and IGNORES markerless directories outright: [[writeLedger]]
+    * commits a `_SUCCESS` after the value, so a marker-free `v=N` can
+    * only be a torn write, and parsing its `value` file could silently
     * return a flushed PREFIX of the real number ('4' of '42'). A torn
     * FIRST-ever write therefore reads as None — the pre-state — and the
     * replay rewrites it.
-    *
-    * Format migration: a state dir written before round 12 holds the
-    * ledger as a 1-row parquet under `v=N` (no `value` file); that
-    * shape is detected and read through a bounded Spark job. The next
-    * [[writeLedger]] writes the raw-value format forward.
     */
   def readLedger(spark: SparkSession, dir: String,
       below: Option[Long] = None): Option[Long] = {
@@ -147,22 +158,12 @@ object Artifacts {
     versions.find(v =>
         fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=$v/_SUCCESS")))
       .map { v =>
-        val valuePath = new org.apache.hadoop.fs.Path(s"$dir/v=$v/value")
-        if (fs.exists(valuePath)) {
-          val in = fs.open(valuePath)
-          val text =
-            try new String(in.readAllBytes(), "UTF-8").trim
-            finally in.close()
-          text.toLongOption.getOrElse(sys.error(
-            s"corrupt ledger value '$text' at $dir/v=$v"))
-        } else {
-          // legacy (pre-FS-ledger) layout: 1-row parquet, `value` column
-          val rows = spark.read.parquet(s"$dir/v=$v")
-            .select(col("value")).limit(2).collect()
-          require(rows.length == 1,
-            s"expected exactly one ledger row at legacy $dir/v=$v")
-          rows.head.getLong(0)
-        }
+        val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/v=$v/value"))
+        val text =
+          try new String(in.readAllBytes(), "UTF-8").trim
+          finally in.close()
+        text.toLongOption.getOrElse(sys.error(
+          s"corrupt ledger value '$text' at $dir/v=$v"))
       }
   }
 
@@ -316,10 +317,11 @@ object Artifacts {
 
   /** The compaction POLICY for `foreachBatch` harnesses — maintenance as
     * part of ingest, not an offline chore someone must remember: every
-    * `compactEvery` batches (0 = off), fold each slice log up to
-    * `batchId - 1` (the newest slice stays replayable — [[compactSlices]]'
-    * own contract) and prune each versioned artifact to its newest two
-    * versions (latest + the replay pre-state). Idempotent under replay:
+    * `compactEvery` batches (0 = off), fold the harness's slice log
+    * (`sliceDir`, schema `sliceDdl`) up to `batchId - 1` (the newest
+    * slice stays replayable — [[compactSlices]]' own contract) and prune
+    * its versioned artifact (`versionDir`) to the newest two versions
+    * (latest + the replay pre-state). Idempotent under replay:
     * a re-fired batch re-runs the same fold (already-folded slices are
     * gone, the base already sits at `batchId - 1`, nothing changes) and
     * the prune is trivially re-runnable. Without this, a long-running
@@ -329,12 +331,11 @@ object Artifacts {
     * listing.
     */
   def maybeCompact(spark: SparkSession, batchId: Long, compactEvery: Int,
-      sliceDirs: Seq[(String, String)], versionDirs: Seq[String]): Unit = {
+      sliceDir: String, sliceDdl: String, versionDir: String): Unit = {
     require(compactEvery >= 0, s"need compactEvery >= 0, got $compactEvery")
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      sliceDirs.foreach { case (dir, ddl) =>
-        compactSlices(spark, dir, upTo = batchId - 1, ddl) }
-      versionDirs.foreach(dir => pruneVersions(spark, dir))
+      compactSlices(spark, sliceDir, upTo = batchId - 1, sliceDdl)
+      pruneVersions(spark, versionDir)
     }
   }
 

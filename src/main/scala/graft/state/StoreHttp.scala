@@ -54,20 +54,7 @@ final class StoreHttp(
 
   def stop(): Unit = if (server != null) server.stop(0)
 
-  /** JSON string escape — quotes/backslashes/control chars in an error
-    * message (easy via a store or SQL failure) must not break the payload.
-    */
-  private def jstr(s: String): String = "\"" + Option(s).getOrElse("null").flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  import StoreHttp.Refused
+  import StoreHttp.{jstr, Refused}
 
   private def handle(ex: HttpExchange): Unit = {
     val resp =
@@ -110,7 +97,7 @@ final class StoreHttp(
           .map(n => s"""{"tp":${jstr(n + "_0")},"host":$host}""")
           .mkString("[", ",", "]"))
       case "stores" :: Nil =>
-        (200, registry.storeNames.map(n => s""""$n"""").mkString("[", ",", "]"))
+        (200, registry.storeNames.map(jstr).mkString("[", ",", "]"))
       case "indexes" :: Nil => // store/http.go GET /indexes
         (200, indexes.keys.toSeq.sorted
           .map { case (s, i) => s"""{"store":${jstr(s)},"index":${jstr(i)}}""" }
@@ -138,6 +125,23 @@ final class StoreHttp(
 }
 
 object StoreHttp {
+  /** JSON string literal for `s` (null renders as the string "null"):
+    * quotes, backslashes and ALL control chars (< 0x20) escaped. Every
+    * string this server puts in a payload goes through it — store names
+    * (a backtick-quoted view name may hold `"` or `\`) and error messages
+    * (easy via a store or SQL failure) must not break the JSON — and so
+    * does Verify's oracle_sql.json.
+    */
+  private[graft] def jstr(s: String): String = "\"" + Option(s).getOrElse("null").flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Unknown store/index → 404, malformed `?limit=` → 400; anything else
     * is an internal failure (500). */
   private final case class Refused(status: Int, msg: String) extends RuntimeException(msg)

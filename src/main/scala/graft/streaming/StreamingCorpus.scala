@@ -139,11 +139,13 @@ object StreamingCorpus {
     * micro-batch spreads 100×/tasks more rows per task instead of
     * landing whole in one task's heap.
     *
-    * Artifact layout under `stateDir`, idempotent per batch id (pre-state
-    * = latest ledger version BELOW the id, so a replayed batch re-derives
-    * the same bytes — the [[StreamingGraph]] exactly-once discipline):
-    *   - `slots/batch=N` — (doc_id, anchor, icp_pos) appended by batch N
-    *   - `ledger/v=N` — the next-position base AFTER batch N
+    * Artifacts under `stateDir` (laid out by [[graft.state.Artifacts]]),
+    * idempotent per batch id (pre-state = latest ledger version BELOW the
+    * id, so a replayed batch re-derives the same bytes — the
+    * [[StreamingGraph]] exactly-once discipline):
+    *   - `slots` — a slice log: (doc_id, anchor, icp_pos) appended by
+    *     each batch
+    *   - `ledger` — per batch, the next-position base AFTER it
     *
     * Usage:
     * {{{
@@ -166,41 +168,31 @@ object StreamingCorpus {
   def icpAttachAtIngest(stateDir: String, standingOrder: DataFrame,
       basePos: Long, compactEvery: Int = 0): (DataFrame, Long) => Unit =
     (cands, batchId) => {
-      ingestIcpBatch(cands, standingOrder, stateDir, batchId, basePos)
-      Artifacts.maybeCompact(cands.sparkSession, batchId, compactEvery,
-        sliceDirs = Seq(s"$stateDir/slots" -> IcpSlotsDdl),
-        versionDirs = Seq(s"$stateDir/ledger"))
-      ()
+      val spark = cands.sparkSession
+      val base = Artifacts.readLedger(spark, s"$stateDir/ledger",
+        below = Some(batchId)).getOrElse(basePos)
+      // icpAttach emits exactly one row per arriving doc, so the ledger
+      // advances by the batch's slot count — observed IN the write job
+      // (one aggregate riding the plan that writes), never a second job
+      // that re-reads the written artifact just to count it
+      val obs = org.apache.spark.sql.Observation()
+      Artifacts.writeSlice(
+        Corpus.icpAttach(cands, standingOrder, base)
+          .observe(obs, count(lit(1)).as("n")),
+        s"$stateDir/slots", batchId)
+      Artifacts.writeLedger(spark, s"$stateDir/ledger", batchId,
+        base + obs.get("n").asInstanceOf[Long])
+      Artifacts.maybeCompact(spark, batchId, compactEvery,
+        s"$stateDir/slots", IcpSlotsDdl, s"$stateDir/ledger")
     }
 
   private val IcpSlotsDdl =
     "doc_id BIGINT, anchor BIGINT, icp_pos BIGINT, batch BIGINT"
 
-  /** One micro-batch of in-context attach, idempotent in `batchId`.
-    * Returns the slots this batch appended.
-    */
-  def ingestIcpBatch(cands: DataFrame, standingOrder: DataFrame,
-      stateDir: String, batchId: Long, basePos: Long): DataFrame = {
-    val spark = cands.sparkSession
-    val base = Artifacts.readLedger(spark, s"$stateDir/ledger",
-      below = Some(batchId)).getOrElse(basePos)
-    // icpAttach emits exactly one row per arriving doc, so the ledger
-    // advances by the batch's slot count — observed IN the write job
-    // (one aggregate riding the plan that writes), never a second job
-    // that re-reads the written artifact just to count it
-    val obs = org.apache.spark.sql.Observation()
-    Corpus.icpAttach(cands, standingOrder, base)
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$stateDir/slots/batch=$batchId")
-    Artifacts.writeLedger(spark, s"$stateDir/ledger", batchId,
-      base + obs.get("n").asInstanceOf[Long])
-    spark.read.parquet(s"$stateDir/slots/batch=$batchId")
-      .select("doc_id", "anchor", "icp_pos")
-  }
-
   /** Every slot appended so far: (doc_id, anchor, icp_pos, batch). */
   def standingIcpSlots(spark: SparkSession, stateDir: String): DataFrame =
-    standingSlices(spark, s"$stateDir/slots", IcpSlotsDdl)
+    Artifacts.readSlices(spark, s"$stateDir/slots", IcpSlotsDdl,
+      completedOnly = true)
 
   /** Concat-and-split packing at ingest — the streaming twin of
     * [[graft.operators.Corpus.packByOrder]]'s append hook: arriving
@@ -215,13 +207,13 @@ object StreamingCorpus {
     * distributed prefix sum: range exchange, per-partition windows,
     * ≤ buckets collected bases — at `baseOffset` = the ledger; only the
     * running token total crosses the tail, one row per batch. The
-    * ledger advance is the batch's token sum, summed distributed from
-    * the written slice.
+    * ledger advance is the batch's token sum, observed in the job that
+    * writes the slice.
     *
-    * Artifact layout under `stateDir` (idempotent per batch id):
-    *   - `slots/batch=N` — (doc_id, pos, n_tok, global_start, first_seq,
-    *     last_seq) for batch N's docs
-    *   - `ledger/v=N` — the running token total AFTER batch N
+    * Artifacts under `stateDir` (idempotent per batch id):
+    *   - `slots` — a slice log: (doc_id, pos, n_tok, global_start,
+    *     first_seq, last_seq) for each batch's docs
+    *   - `ledger` — per batch, the running token total AFTER it
     *
     * Within a micro-batch docs order by `pos`, so ONE batch reproduces
     * `packByOrder(batch, pos, n_tok, seqLen, baseOffset = ledger)`
@@ -233,46 +225,37 @@ object StreamingCorpus {
   def packAppendAtIngest(stateDir: String, seqLen: Int,
       baseOffset: Long, compactEvery: Int = 0): (DataFrame, Long) => Unit =
     (rows, batchId) => {
-      ingestPackBatch(rows, stateDir, batchId, seqLen, baseOffset)
-      Artifacts.maybeCompact(rows.sparkSession, batchId, compactEvery,
-        sliceDirs = Seq(s"$stateDir/slots" -> PackSlotsDdl),
-        versionDirs = Seq(s"$stateDir/ledger"))
-      ()
+      require(seqLen > 0, s"need seqLen > 0, got $seqLen")
+      val spark = rows.sparkSession
+      val base = Artifacts.readLedger(spark, s"$stateDir/ledger",
+        below = Some(batchId)).getOrElse(baseOffset)
+      // the ledger advance is the batch's token sum — observed IN the
+      // write job (one aggregate riding the plan that writes), not a
+      // second full job over the re-read slice
+      val obs = org.apache.spark.sql.Observation()
+      Artifacts.writeSlice(
+        Corpus.packByOrder(
+            rows.select(col("doc_id").cast("long"), col("pos").cast("long"),
+              col("n_tok").cast("long")),
+            col("pos"), col("n_tok"), seqLen, baseOffset = base)
+          .observe(obs, coalesce(sum(col("n_tok")), lit(0L)).as("t")),
+        s"$stateDir/slots", batchId)
+      Artifacts.writeLedger(spark, s"$stateDir/ledger", batchId,
+        base + obs.get("t").asInstanceOf[Long])
+      Artifacts.maybeCompact(spark, batchId, compactEvery,
+        s"$stateDir/slots", PackSlotsDdl, s"$stateDir/ledger")
     }
 
   private val PackSlotsDdl =
     "doc_id BIGINT, pos BIGINT, n_tok BIGINT, global_start BIGINT, " +
       "first_seq BIGINT, last_seq BIGINT, batch BIGINT"
 
-  /** One micro-batch of pack append, idempotent in `batchId`. Returns
-    * the slots this batch appended.
-    */
-  def ingestPackBatch(rows: DataFrame, stateDir: String, batchId: Long,
-      seqLen: Int, baseOffset: Long): DataFrame = {
-    require(seqLen > 0, s"need seqLen > 0, got $seqLen")
-    val spark = rows.sparkSession
-    val base = Artifacts.readLedger(spark, s"$stateDir/ledger",
-      below = Some(batchId)).getOrElse(baseOffset)
-    // the ledger advance is the batch's token sum — observed IN the
-    // write job (one aggregate riding the plan that writes), not a
-    // second full job over the re-read slice
-    val obs = org.apache.spark.sql.Observation()
-    Corpus.packByOrder(
-        rows.select(col("doc_id").cast("long"), col("pos").cast("long"),
-          col("n_tok").cast("long")),
-        col("pos"), col("n_tok"), seqLen, baseOffset = base)
-      .observe(obs, coalesce(sum(col("n_tok")), lit(0L)).as("t"))
-      .write.mode("overwrite").parquet(s"$stateDir/slots/batch=$batchId")
-    Artifacts.writeLedger(spark, s"$stateDir/ledger", batchId,
-      base + obs.get("t").asInstanceOf[Long])
-    spark.read.parquet(s"$stateDir/slots/batch=$batchId")
-  }
-
   /** Every pack slot appended so far: (doc_id, pos, n_tok, global_start,
     * first_seq, last_seq, batch).
     */
   def standingPackSlots(spark: SparkSession, stateDir: String): DataFrame =
-    standingSlices(spark, s"$stateDir/slots", PackSlotsDdl)
+    Artifacts.readSlices(spark, s"$stateDir/slots", PackSlotsDdl,
+      completedOnly = true)
 
   /** Per-stratum admission quota at ingest — the streaming face of
     * [[graft.operators.Corpus.capPerStratum]]: admit rows first-come
@@ -299,54 +282,47 @@ object StreamingCorpus {
     * not a driver object. `key` must be unique within a micro-batch
     * (it is the record id — capPerStratum's semi-join contract).
     *
-    * Artifact layout under `stateDir` (idempotent per batch id):
-    *   - `admitted/batch=N` — (stratum, key, seq) admitted by batch N
-    *   - `counts/v=N` — per-stratum admitted totals AFTER batch N
+    * Artifacts under `stateDir` (idempotent per batch id):
+    *   - `admitted` — a slice log: (stratum, key, seq) admitted by each
+    *     batch
+    *   - `counts` — versions of the per-stratum admitted totals, one
+    *     AFTER each batch
     */
   def admitQuotaAtIngest(stateDir: String, stratum: String, key: String,
       seq: String, quota: Int, compactEvery: Int = 0): (DataFrame, Long) => Unit =
     (rows, batchId) => {
-      ingestQuotaBatch(rows, stateDir, batchId, stratum, key, seq, quota)
-      Artifacts.maybeCompact(rows.sparkSession, batchId, compactEvery,
-        sliceDirs = Seq(s"$stateDir/admitted" -> AdmittedDdl),
-        versionDirs = Seq(s"$stateDir/counts"))
-      ()
+      require(quota > 0, s"need quota > 0, got $quota")
+      val spark = rows.sparkSession
+      val pre = standingQuotaCounts(spark, stateDir, below = Some(batchId))
+      val batch = rows
+        .select(col(stratum).cast("string").as("stratum"),
+          col(key).cast("long").as("key"), col(seq).cast("long").as("seq"))
+      // phase one: bounded skew-safe top-quota per stratum (rows beyond
+      // the quota prefix can never admit at ANY prior count)
+      Artifacts.writeSlice(
+        Corpus.capPerStratum(batch, Seq("stratum"),
+            struct(col("seq"), col("key")), "key", quota)
+          .withColumn("_aqR", row_number().over(
+            Window.partitionBy(col("stratum")).orderBy(col("seq"), col("key"))))
+          .join(pre, Seq("stratum"), "left")
+          .filter(coalesce(col("admitted"), lit(0L)) + col("_aqR") <= quota)
+          .select("stratum", "key", "seq"),
+        s"$stateDir/admitted", batchId)
+      Artifacts.writeVersion(
+        pre.unionByName(
+            Artifacts.readSlice(spark, s"$stateDir/admitted", batchId)
+              .groupBy("stratum").agg(count(lit(1)).as("admitted")))
+          .groupBy("stratum").agg(sum("admitted").as("admitted")),
+        s"$stateDir/counts", batchId)
+      Artifacts.maybeCompact(spark, batchId, compactEvery,
+        s"$stateDir/admitted", AdmittedDdl, s"$stateDir/counts")
     }
 
   private val AdmittedDdl = "stratum STRING, key BIGINT, seq BIGINT, batch BIGINT"
 
-  /** One micro-batch of quota admission, idempotent in `batchId`.
-    * Returns the rows this batch admitted.
-    */
-  def ingestQuotaBatch(rows: DataFrame, stateDir: String, batchId: Long,
-      stratum: String, key: String, seq: String, quota: Int): DataFrame = {
-    require(quota > 0, s"need quota > 0, got $quota")
-    val spark = rows.sparkSession
-    val pre = standingQuotaCounts(spark, stateDir, below = Some(batchId))
-    val batch = rows
-      .select(col(stratum).cast("string").as("stratum"),
-        col(key).cast("long").as("key"), col(seq).cast("long").as("seq"))
-    // phase one: bounded skew-safe top-quota per stratum (rows beyond
-    // the quota prefix can never admit at ANY prior count)
-    Corpus.capPerStratum(batch, Seq("stratum"),
-        struct(col("seq"), col("key")), "key", quota)
-      .withColumn("_aqR", row_number().over(
-        Window.partitionBy(col("stratum")).orderBy(col("seq"), col("key"))))
-      .join(pre, Seq("stratum"), "left")
-      .filter(coalesce(col("admitted"), lit(0L)) + col("_aqR") <= quota)
-      .select("stratum", "key", "seq")
-      .write.mode("overwrite").parquet(s"$stateDir/admitted/batch=$batchId")
-    val slice = spark.read.parquet(s"$stateDir/admitted/batch=$batchId")
-    pre.unionByName(
-        slice.groupBy("stratum").agg(count(lit(1)).as("admitted")))
-      .groupBy("stratum").agg(sum("admitted").as("admitted"))
-      .write.mode("overwrite").parquet(s"$stateDir/counts/v=$batchId")
-    slice
-  }
-
-  /** The standing per-stratum admitted totals — the latest `counts/v=N`
-    * below the bound (exclusive; None reads the newest complete one), or
-    * an empty (stratum, admitted) frame before the first batch.
+  /** The standing per-stratum admitted totals — the latest `counts`
+    * version below the bound (exclusive; None reads the newest complete
+    * one), or an empty (stratum, admitted) frame before the first batch.
     */
   def standingQuotaCounts(spark: SparkSession, stateDir: String,
       below: Option[Long] = None): DataFrame =
@@ -355,21 +331,6 @@ object StreamingCorpus {
 
   /** Every admitted row so far: (stratum, key, seq, batch). */
   def standingAdmitted(spark: SparkSession, stateDir: String): DataFrame =
-    standingSlices(spark, s"$stateDir/admitted", AdmittedDdl)
-
-  /** Union of every standing `batch=N` slice under `dir` (the batch id
-    * rides as a long column); an empty frame with the given schema
-    * before the first batch. Compaction-aware — long-running ingest
-    * folds old slices with [[graft.state.Artifacts.compactSlices]] and
-    * this reader keeps returning the identical standing rows.
-    *
-    * Reads COMMITTED slices only (`_SUCCESS` present): these are the
-    * consumer-facing standing views, and a read concurrent with an
-    * in-flight micro-batch must not open the torn slice's partial
-    * files. The harnesses' own in-batch reads are unaffected — they
-    * run after their slice write committed.
-    */
-  private def standingSlices(spark: SparkSession, dir: String,
-      ddl: String): DataFrame =
-    Artifacts.readSlices(spark, dir, ddl, completedOnly = true)
+    Artifacts.readSlices(spark, s"$stateDir/admitted", AdmittedDdl,
+      completedOnly = true)
 }

@@ -243,49 +243,6 @@ object StreamingDedup {
     }
   }
 
-  /** Per-doc n-gram novelty at ingest — the EXACT streaming twin of
-    * [[graft.operators.Dedup.noveltyReport]] ("how much of this arriving
-    * doc is genuinely new?"). Unlike the rest of the door-check family,
-    * the novelty inventory is NOT vocabulary-sized: a corpus's distinct
-    * 3-gram set grows near-linearly with its tokens, so at 100 TB it is
-    * billions of longs — never a driver set, never a task closure. Each
-    * micro-batch therefore runs the SAME distributed left join + per-doc
-    * agg the batch operator runs ([[Dedup.noveltyReportAgainst]]) against
-    * the PERSISTED inventory DataFrame, inside `foreachBatch`; scores are
-    * deterministic under any arrival order or batching and equal the
-    * batch report record-for-record (spec-pinned). The scored frame for
-    * each micro-batch goes to `sink` (write to the destination table
-    * there; foreachBatch replays the batch id on recovery, so an
-    * idempotent-by-batch-id sink keeps exactly-once).
-    *
-    * This is the production default. When the join's latency is too much
-    * for the door and a one-sided error is acceptable, use
-    * [[noveltyAtIngestBloom]] — a stateless per-record probe against a
-    * fixed-size blob (novelty_ppm becomes a lower bound).
-    *
-    * The batch-id replay guarantee above requires a checkpoint: pass
-    * `checkpoint` (it is applied to the writer before `start()`), or set
-    * the session-wide `spark.sql.streaming.checkpointLocation` conf.
-    * Without either there is no recovery log and restarts re-deliver
-    * from the source's own position, not the last committed batch.
-    * `configure` exposes the writer for any further options
-    * (queryName, trigger) without widening this signature per-knob.
-    */
-  def noveltyAtIngest(docs: DataFrame, id: String, text: String,
-      shingleN: Int, inventory: DataFrame,
-      checkpoint: Option[String] = None,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val base = docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(Dedup.noveltyReportAgainst(
-          batch, inventory, id, text, shingleN), batchId)
-      }
-    configure(checkpoint.fold(base)(p => base.option("checkpointLocation", p)))
-      .start()
-  }
-
   /** Bloom-gated novelty at ingest: the frozen inventory collapses to a
     * fixed-size bloom blob ([[buildNoveltyBloom]] — `numBits/8` bytes
     * REGARDLESS of corpus size), and scoring is a stateless codegen'd
@@ -295,6 +252,13 @@ object StreamingDedup {
     * the safe direction for novelty triage (a source is only ever
     * under-credited, a stale source never scores novel). Output schema
     * equals the batch report: (<id>, n_grams, n_unseen, novelty_ppm).
+    *
+    * The exact door check needs no streaming operator: run
+    * [[Dedup.noveltyReportAgainst]] against the persisted inventory
+    * ([[buildNoveltyInventory]]) inside `writeStream.foreachBatch` — the
+    * same distributed left join + per-doc agg as the batch report, so
+    * scores equal it record-for-record under any batching. Use this bloom
+    * form when that join's latency is too much for the door.
     */
   def noveltyAtIngestBloom(docs: DataFrame, id: String, text: String,
       shingleN: Int, bloom: Array[Byte]): DataFrame =
@@ -311,7 +275,7 @@ object StreamingDedup {
   /** The persistable novelty inventory (distinct gram hashes, column
     * `_nvG`) — a distributed DataFrame, parquet round-tripped via
     * [[graft.state.Artifacts]]; deliberately NEVER collected (see
-    * [[noveltyAtIngest]]).
+    * [[Dedup.noveltyInventory]]).
     */
   def buildNoveltyInventory(corpus: DataFrame, id: String, text: String,
       shingleN: Int): DataFrame =

@@ -205,13 +205,12 @@ class ArtifactsSpec extends SparkSpec {
     import graft.streaming.StreamingCorpus
     val state = tmp("graft_empty_batch") + "/state"
     val empty = Seq.empty[(Long, Long, Long)].toDF("doc_id", "pos", "n_tok")
-    StreamingCorpus.ingestPackBatch(empty, state, batchId = 0L,
-      seqLen = 64, baseOffset = 1000L)
+    StreamingCorpus.packAppendAtIngest(state, seqLen = 64,
+      baseOffset = 1000L)(empty, 0L)
     assert(StreamingCorpus.standingPackSlots(spark, state).count() === 0L)
     assert(Artifacts.readLedger(spark, s"$state/ledger") === Some(1000L))
-    StreamingCorpus.ingestPackBatch(
-      Seq((7L, 1L, 30L)).toDF("doc_id", "pos", "n_tok"), state,
-      batchId = 1L, seqLen = 64, baseOffset = 1000L)
+    StreamingCorpus.packAppendAtIngest(state, seqLen = 64,
+      baseOffset = 1000L)(Seq((7L, 1L, 30L)).toDF("doc_id", "pos", "n_tok"), 1L)
     assert(StreamingCorpus.standingPackSlots(spark, state)
       .select("doc_id", "global_start").as[(Long, Long)].collect().toSeq
       === Seq((7L, 1000L)),
@@ -258,17 +257,6 @@ class ArtifactsSpec extends SparkSpec {
     tp.write("4".getBytes("UTF-8")); tp.close() // torn prefix of '42'
     assert(Artifacts.readLedger(spark, led2) === None,
       "a markerless-only ledger version must read as the pre-state")
-
-    // legacy (pre-FS-ledger) layout: 1-row parquet under v=N with a
-    // `value` column, _SUCCESS from the Spark committer — read once,
-    // written forward in the raw format by the next writeLedger
-    val led3 = tmp("graft_hard_led3") + "/ledger"
-    Seq(Tuple1(77L)).toDF("value")
-      .coalesce(1).write.mode("overwrite").parquet(s"$led3/v=0")
-    assert(Artifacts.readLedger(spark, led3) === Some(77L))
-    Artifacts.writeLedger(spark, led3, 1L, 78L)
-    assert(Artifacts.readLedger(spark, led3) === Some(78L))
-    assert(Artifacts.readLedger(spark, led3, below = Some(1L)) === Some(77L))
 
     // markerless committer (marksuccessfuljobs=false): compaction must
     // refuse BEFORE deleting — readSlices would never recognize the new

@@ -48,6 +48,24 @@ class StoreHttpSpec extends SparkSpec {
     } finally http.stop()
   }
 
+  test("GET /stores escapes store names: the body parses as JSON") {
+    // Spark accepts both as backtick-quoted view names
+    val names = Seq("`a\"b`", "`c\\d`", "plain")
+    val registry = new StoreRegistry(spark)
+    names.foreach(n => registry.register(n, Seq((1L, "x")).toDF("id", "v"), keyCol = "id"))
+    val http = new StoreHttp(registry)
+    val port = http.start()
+    try {
+      val body = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(get(port, "/stores"))
+      assert(body.isArray)
+      assert((0 until body.size).map(body.get(_).asText) === names.sorted)
+    } finally {
+      http.stop()
+      names.foreach(n => spark.sql(s"DROP VIEW IF EXISTS $n"))
+    }
+  }
+
   test("unknown store/index is 404; internal failures are 500 with valid JSON") {
     val registry = new StoreRegistry(spark)
     registry.register("acc", Seq((1L, "a\"b")).toDF("id", "name"), keyCol = "id")

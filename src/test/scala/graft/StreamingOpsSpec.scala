@@ -1038,8 +1038,7 @@ class StreamingOpsSpec extends SparkSpec {
     // replay the LAST batch id (the failure-recovery path): pre-state is
     // the latest ledger BELOW the id, so the artifact re-derives the
     // same bytes and nothing advances (exactly-once via versioning)
-    StreamingCorpus.ingestIcpBatch(cdf(b2), order, state2,
-      batchId = 1L, basePos = basePos)
+    StreamingCorpus.icpAttachAtIngest(state2, order, basePos)(cdf(b2), 1L)
     assert(StreamingCorpus.standingIcpSlots(spark, state2)
       .select("doc_id", "anchor", "icp_pos")
       .as[(Long, Long, Long)].collect().toSet === twoBatch,
@@ -1109,8 +1108,8 @@ class StreamingOpsSpec extends SparkSpec {
     val before = StreamingCorpus.standingPackSlots(spark, state2)
       .select("doc_id", "global_start", "first_seq", "last_seq")
       .as[(Long, Long, Long, Long)].collect().toSet
-    StreamingCorpus.ingestPackBatch(rdf(rows.drop(2)), state2,
-      batchId = 1L, seqLen = 64, baseOffset = basePos)
+    StreamingCorpus.packAppendAtIngest(state2, seqLen = 64,
+      baseOffset = basePos)(rdf(rows.drop(2)), 1L)
     assert(StreamingCorpus.standingPackSlots(spark, state2)
       .select("doc_id", "global_start", "first_seq", "last_seq")
       .as[(Long, Long, Long, Long)].collect().toSet === before,
@@ -1127,8 +1126,8 @@ class StreamingOpsSpec extends SparkSpec {
       .select("doc_id", "global_start", "first_seq", "last_seq")
       .as[(Long, Long, Long, Long)].collect().toSet === before,
       "compaction must preserve the standing pack layout")
-    StreamingCorpus.ingestPackBatch(rdf(rows.drop(2)), state2,
-      batchId = 1L, seqLen = 64, baseOffset = basePos)
+    StreamingCorpus.packAppendAtIngest(state2, seqLen = 64,
+      baseOffset = basePos)(rdf(rows.drop(2)), 1L)
     assert(StreamingCorpus.standingPackSlots(spark, state2)
       .select("doc_id", "global_start", "first_seq", "last_seq")
       .as[(Long, Long, Long, Long)].collect().toSet === before,
@@ -1180,8 +1179,8 @@ class StreamingOpsSpec extends SparkSpec {
     assert(standing() === expect)
     // the LAST batch still replays idempotently against its preserved
     // pre-state, with compaction having fired mid-stream
-    StreamingCorpus.ingestPackBatch(rdf(rows.drop(4)), state,
-      batchId = 2L, seqLen = 64, baseOffset = 1000L)
+    StreamingCorpus.packAppendAtIngest(state, seqLen = 64,
+      baseOffset = 1000L)(rdf(rows.drop(4)), 2L)
     assert(standing() === expect, "replay after in-stream compaction must re-derive the same bytes")
 
     // the QUOTA harness: same policy over its admitted log + counts
@@ -1349,9 +1348,8 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap === Map("a" -> 2L, "b" -> 2L))
     // replaying the LAST batch id re-admits the same rows against the
     // same pre-counts — artifacts unchanged
-    StreamingCorpus.ingestQuotaBatch(
-      Seq(("a", 2L, 10L), ("b", 8L, 6L), ("b", 6L, 7L)).toDF("src", "id", "seq"),
-      state, batchId = 1L, "src", "id", "seq", quota = 2)
+    StreamingCorpus.admitQuotaAtIngest(state, "src", "id", "seq", quota = 2)(
+      Seq(("a", 2L, 10L), ("b", 8L, 6L), ("b", 6L, 7L)).toDF("src", "id", "seq"), 1L)
     assert(StreamingCorpus.standingAdmitted(spark, state)
       .select("stratum", "key").as[(String, Long)].collect().toSet === admitted,
       "batch replay must not re-admit or drop differently")
@@ -1365,8 +1363,8 @@ class StreamingOpsSpec extends SparkSpec {
     val skewState = s"$root/skew_state"
     val mega = (1L to 10000L).map(i => ("hot", i, 20000L - i)) ++
       Seq(("cold", 50000L, 1L), ("cold", 50001L, 2L), ("cold", 50002L, 3L))
-    StreamingCorpus.ingestQuotaBatch(mega.toDF("src", "id", "seq"),
-      skewState, batchId = 0L, "src", "id", "seq", quota = 3)
+    StreamingCorpus.admitQuotaAtIngest(skewState, "src", "id", "seq", quota = 3)(
+      mega.toDF("src", "id", "seq"), 0L)
     val got = StreamingCorpus.standingAdmitted(spark, skewState)
       .select("stratum", "key").as[(String, Long)].collect().toSet
     // hot's smallest seqs are 20000-i for the LARGEST i: ids 10000, 9999, 9998
@@ -1553,13 +1551,15 @@ class StreamingOpsSpec extends SparkSpec {
 
     val mem = MemoryStream[(Long, String)]
     val got = collection.mutable.Map.empty[Long, (Long, Long, Long, Long)]
-    val q = StreamingDedup.noveltyAtIngest(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, inv,
-      checkpoint = Some(s"$root/ckpt")) {
-      (scored, _) =>
-        scored.as[(Long, Long, Long, Long)].collect()
+    // the exact door check is the batch operator inside foreachBatch
+    val q = mem.toDF().toDF("doc_id", "text").writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.operators.Dedup.noveltyReportAgainst(batch, inv, "doc_id", "text", 3)
+          .as[(Long, Long, Long, Long)].collect()
           .foreach(r => got(r._1) = r)
-    }
+      }
+      .start()
     try {
       mem.addData(arrivals.take(2): _*)
       q.processAllAvailable()
@@ -1775,8 +1775,8 @@ class StreamingOpsSpec extends SparkSpec {
 
     // replay the LAST batch id (the failure-recovery path): the refresh
     // re-derives from the same pre-state, so the artifact is unchanged
-    StreamingGraph.ingestBatch(e2.toDF("src", "dst"), state,
-      batchId = 1L, rounds = 2)
+    StreamingGraph.pageRankAtIngest(state, roundsPerBatch = 2)(
+      e2.toDF("src", "dst"), 1L)
     val after = StreamingGraph.standingRanks(spark, state)
       .as[(Long, Long)].collect().toMap
     assert(after === streamed, "batch replay must not advance the ranks")
@@ -2046,7 +2046,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(streamed(11L) === 1L, "bridged families must share one canonical")
 
     // replaying the last batch id re-derives from the same pre-state
-    StreamingGraph.ingestPairs(b2.toDF("a_id", "b_id"), state, batchId = 1L)
+    StreamingGraph.componentsAtIngest(state)(b2.toDF("a_id", "b_id"), 1L)
     assert(StreamingGraph.standingComponents(spark, state)
       .as[(Long, Long)].collect().toMap === streamed)
   }

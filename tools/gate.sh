@@ -15,13 +15,15 @@
 #   5. no .localCheckpoint( in src/main outside plans/Materialize.scala
 #   6. no MessageDigest / .split(" / .substring( in
 #      src/main/scala/graft/streaming
-#   7. git status --porcelain          (tree clean apart from the staged
+#   7. no `batch=$` / `/v=$` artifact-path literal in src/main outside
+#      state/Artifacts.scala
+#   8. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
 # Usage: tools/gate.sh [sfDir]           (default /root/testdata/sf0.01)
 #   GATE_SKIP_TESTS=1   skip step 1 (when sbt test just ran unchanged)
-#   GATE_ALLOW_DIRTY=1  demote step 7 to a warning (mid-round iteration)
+#   GATE_ALLOW_DIRTY=1  demote step 8 to a warning (mid-round iteration)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -76,6 +78,19 @@ stray="$(grep -rnE 'MessageDigest|\.split\("|\.substring\(' src/main/scala/graft
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "compute these with the batch operator's Column expression"
+  fail=1
+else
+  echo "ok"
+fi
+
+# the versioned-artifact layout (a batch=N slice log, v=N versions) is
+# spelled once, in graft.state.Artifacts; harnesses call its writers and
+# readers instead of building the paths themselves
+step "artifact layout only in Artifacts.scala"
+stray="$(grep -rnE 'batch=\$|/v=\$' src/main | grep -v '^src/main/scala/graft/state/Artifacts\.scala:')"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "write and read these through graft.state.Artifacts"
   fail=1
 else
   echo "ok"
