@@ -29,9 +29,14 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // every Materialize.release logs "RDD N was locally checkpointed, its
-    // lineage has been truncated..." at WARN under this one logger
-    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+    quietReleases()
     spark
   }
+
+  /** Every Materialize.release logs "RDD N was locally checkpointed, its
+    * lineage has been truncated..." at WARN under this one logger; call
+    * after `setLogLevel`, which resets it.
+    */
+  def quietReleases(): Unit =
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
 }

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -19,18 +21,23 @@ import org.apache.spark.sql.execution.LogicalRDD
   * inputs. A reliable `checkpoint()` into a checkpoint dir would survive
   * that; no workload runs one, so it is not offered here.
   *
-  * Plan fact every caller inherits: the checkpoint's `LogicalRDD` reports
-  * `UnknownPartitioning`, so repartitioning a frame before materializing
-  * it buys nothing downstream. A join on the materialized frame
-  * re-exchanges its rows either way (plan-verified).
+  * Plan fact every frame caller inherits: the checkpoint's `LogicalRDD`
+  * reports `UnknownPartitioning`, so repartitioning a frame before
+  * materializing it buys nothing downstream. A join on the materialized
+  * frame re-exchanges its rows either way (plan-verified). The RDD form
+  * keeps the RDD's partitions and partitioner, so a frame built over its
+  * rows may declare the partitioning they have: an upserted store's
+  * frame declares `HashPartitioning` on its head key
+  * ([[graft.state.KeyedStore]]).
   *
   * Release: `Dataset.unpersist()` does NOT free a local checkpoint (it
   * only drops cache-manager entries); [[release]] unpersists the
   * `LogicalRDD`'s own RDD. Reading a released frame throws, so never
   * release a frame something may still read: the frame an operator
   * returns, a frame a later plan still scans (suffix-array levels the LCP
-  * walk reads), or a snapshot a concurrent reader may hold
-  * (`StoreRegistry.upsert`'s superseded snapshot).
+  * walk reads), or a version a concurrent reader may hold
+  * (`StoreRegistry.upsert`'s superseded store version, which the
+  * ContextCleaner frees once nothing references it).
   */
 object Materialize {
 
@@ -39,13 +46,25 @@ object Materialize {
     * call site is set from the caller's frame instead, so the job keeps
     * the `localCheckpoint at File.scala:line` name of the calling line.
     */
-  def apply[T](ds: Dataset[T]): Dataset[T] = {
-    val sc = ds.sparkSession.sparkContext
+  def apply[T](ds: Dataset[T]): Dataset[T] =
+    named(ds.sparkSession.sparkContext)(ds.localCheckpoint(true))
+
+  /** The RDD form of [[apply]]: `rdd` is checkpointed locally and computed
+    * at once, by a job named after the calling line. Its lineage ends at
+    * its own blocks.
+    */
+  def apply[T](rdd: RDD[T]): RDD[T] = named(rdd.sparkContext) {
+    rdd.localCheckpoint()
+    rdd.count()
+    rdd
+  }
+
+  private def named[A](sc: SparkContext)(run: => A): A = {
     val prior = sc.getLocalProperty(CallSiteShort)
     // a call site the caller set on purpose wins, as it would for a
     // direct localCheckpoint
     if (prior == null) sc.setCallSite(s"localCheckpoint at $caller")
-    try ds.localCheckpoint(true)
+    try run
     finally sc.setLocalProperty(CallSiteShort, prior)
   }
 

@@ -1,7 +1,10 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RowsFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.StreamingSearch.{CosineInventory, Posting}
 
@@ -200,8 +203,8 @@ object Artifacts {
   }
 
   private def empty(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    RowsFrame(spark, DataTypeUtils.toAttributes(StructType.fromDDL(ddl)),
+      spark.sparkContext.emptyRDD, UnknownPartitioning(0))
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)

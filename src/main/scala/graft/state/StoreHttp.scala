@@ -19,11 +19,14 @@ import org.apache.spark.sql.functions.{col, lit}
   *   GET /stores/{s}/indexes/{i}/{k}  → secondary-index lookup (A5)
   *   GET /meta                        → store→host discovery (meta.go analog)
   *
-  * Rows render via `Dataset.toJSON` (schema-faithful JSON). Point lookups
-  * run as pushed-down predicates against the snapshot — the driver only
-  * collects the matching rows, so the surface works unchanged whether the
-  * snapshot is 100 rows or 100 TB of partitioned parquet. Built on the
-  * JDK's HttpServer: no dependencies, ephemeral port for tests.
+  * Rows render via `Dataset.toJSON` (schema-faithful JSON). A point
+  * lookup is an equality filter on the store's key column, collected to
+  * the driver. On an upserted store it filters the one partition the key
+  * hashes to, in which the key's row is a hash-map hit
+  * ([[StoreRegistry.pointRows]]), so it runs one task over at most the
+  * rows sharing its head key. On a registered store it filters the whole
+  * frame, a predicate Spark pushes down to the scan. Built on the JDK's
+  * HttpServer: no dependencies, ephemeral port for tests.
   *
   * The HTTP layer is the one legitimately driver-side collect in the
   * engine, so the caller-controlled `limit` query param is clamped to
@@ -110,8 +113,9 @@ final class StoreHttp(
         (200, rows(storeOr404(s).limit(limit)))
       case "stores" :: s :: key :: Nil =>
         val df = storeOr404(s)
-        (200, rows(df.filter(col(registry.keyOf(s)) === lit(key)
-          .cast(df.schema(registry.keyOf(s)).dataType))))
+        val k = registry.keyOf(s)
+        (200, rows(registry.pointRows(s, key).getOrElse(df)
+          .filter(col(k) === lit(key).cast(df.schema(k).dataType))))
       case "stores" :: s :: "indexes" :: i :: key :: Nil =>
         val df = storeOr404(s)
         val expr = indexes.getOrElse((s, i), throw Refused(404, s"unknown index $i"))

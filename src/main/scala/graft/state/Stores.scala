@@ -5,24 +5,30 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Materialize
-
 /** Store registry + query surface: the batch analog of the reference's
   * store registry and HTTP interactive-query layer
   * (`/root/reference/kstream/store/registry.go:12-160`, store/http.go:120-399).
-  * A "store" is a named keyed DataFrame (usually a latest-by-key snapshot)
-  * registered as a temp view, so `GET /stores/{s}/{key}` becomes
-  * `spark.sql("SELECT ... WHERE key = ...")` — the HTTP layer itself is a
-  * transport detail, not an engine capability.
+  * A "store" is a named keyed DataFrame registered as a temp view, so
+  * `GET /stores/{s}/{key}` becomes a `WHERE key = ...` over it — the HTTP
+  * layer itself is a transport detail, not an engine capability.
+  *
+  * A store fed by [[upsert]] is a [[KeyedStore]]: its rows are
+  * hash-partitioned on the first key column and indexed by key in each
+  * partition, as the reference keeps one local KV store per partition
+  * (store/store.go:151-173). Its frame declares
+  * `HashPartitioning(head, spark.sql.shuffle.partitions)`, and a point
+  * lookup reads the one map its key hashes to. A store added by
+  * [[register]] is any frame, read by filtering it.
   */
 final class StoreRegistry(spark: SparkSession) {
   private val stores = TrieMap.empty[String, DataFrame]
   private val keys = TrieMap.empty[String, String]
+  private val keyed = TrieMap.empty[String, KeyedStore]
 
   def register(name: String, df: DataFrame): Unit = {
-    stores.put(name, df)
+    keyed.remove(name)
     keys.putIfAbsent(name, df.columns.head)
-    df.createOrReplaceTempView(name)
+    publish(name, df)
   }
 
   def register(name: String, df: DataFrame, keyCol: String): Unit = {
@@ -31,26 +37,45 @@ final class StoreRegistry(spark: SparkSession) {
   }
 
   /** Streaming materialize (S4): called per micro-batch from
-    * `writeStream.foreachBatch` — merge the batch into the keyed snapshot,
-    * latest `ord` wins. [[graft.plans.Materialize]] truncates lineage so a
-    * long-running query doesn't accrete one union per batch. The
-    * superseded snapshot is never released: a concurrent reader
-    * ([[StoreHttp]]) may still scan it, and reading a released
-    * checkpoint throws. The durable
-    * production form of this is a MERGE into a transactional table or the
-    * state store itself ([[graft.streaming.StreamingState.latestByKey]]).
+    * `writeStream.foreachBatch` — merge the batch into the keyed store,
+    * latest `ord` wins. Only the batch's rows are shuffled, each to the
+    * partition of its head key, where it replaces the stored row if its
+    * `ord` is strictly greater ([[KeyedStore]]). The new version is
+    * materialized by [[graft.plans.Materialize]], so its lineage ends at
+    * its own blocks. A batch that lacks a store column, adds one or
+    * changes a column's type fails naming the column, and the store stays
+    * at its previous version. A superseded version is never released
+    * here: a temp-view query planned on it may still run after the swap,
+    * and reading a released checkpoint throws. The ContextCleaner frees
+    * it once nothing references it. The durable production form of this
+    * is a MERGE into a transactional table or the state store itself
+    * ([[graft.streaming.StreamingState.latestByKey]]).
     */
   def upsert(name: String, batch: DataFrame, keyCols: Seq[String], ord: Seq[Column]): Unit = {
-    val merged = stores.get(name) match {
-      case Some(cur) => Upserts.latestByKey(cur.unionByName(batch), keyCols, ord)
-      case None      => Upserts.latestByKey(batch, keyCols, ord)
-    }
     // foreachBatch hands us a DataFrame bound to a per-stream session
-    // clone; rebind the materialized snapshot to the registry's session so
-    // the temp view is visible to interactive queries.
-    val snap = Materialize(merged)
+    // clone; every version's frame is bound to the registry's session so
+    // the temp view is visible to interactive queries
+    val next = (stores.get(name), keyed.get(name)) match {
+      case (_, Some(cur)) if cur.keyedBy(keyCols, ord) => cur.merge(batch, ord)
+      case (Some(cur), _) =>
+        KeyedStore(spark, cur.unionByName(KeyedStore.aligned(batch, cur.schema)), keyCols, ord)
+      case (None, _) => KeyedStore(spark, batch, keyCols, ord)
+    }
     keys.put(name, keyCols.head)
-    register(name, spark.createDataFrame(snap.rdd, snap.schema))
+    keyed.put(name, next)
+    publish(name, next.view)
+  }
+
+  /** The rows of store `name` a point lookup of `key` on its key column
+    * can match: one partition of an upserted store; `None` for a
+    * registered one, whose whole frame is filtered instead.
+    */
+  def pointRows(name: String, key: String): Option[DataFrame] =
+    keyed.get(name).flatMap(_.point(key))
+
+  private def publish(name: String, df: DataFrame): Unit = {
+    stores.put(name, df)
+    df.createOrReplaceTempView(name)
   }
 
   /** `GET /stores` — registry.go:131-141. */

@@ -18,6 +18,7 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Session.quietReleases()
     GraftExtensions.ensure(s)
     s
   }

@@ -17,7 +17,8 @@
 #      src/main/scala/graft/streaming
 #   7. no `batch=$` / `/v=$` artifact-path literal in src/main outside
 #      state/Artifacts.scala
-#   8. git status --porcelain          (tree clean apart from the staged
+#   8. no `.rdd` / `createDataFrame(` in src/main/scala/graft/state
+#   9. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
@@ -91,6 +92,19 @@ stray="$(grep -rnE 'batch=\$|/v=\$' src/main | grep -v '^src/main/scala/graft/st
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "write and read these through graft.state.Artifacts"
+  fail=1
+else
+  echo "ok"
+fi
+
+# a store's frames are built over internal rows (RowsFrame), never by a
+# Row round trip through `.rdd` and `createDataFrame`, which drops the
+# frame's partitioning and converts every row twice
+step "no Row round trip in graft/state"
+stray="$(grep -rnE '\.rdd([^.A-Za-z0-9_]|$)|createDataFrame\(' src/main/scala/graft/state)"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "build these frames with org.apache.spark.sql.RowsFrame"
   fail=1
 else
   echo "ok"
