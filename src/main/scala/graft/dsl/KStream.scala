@@ -78,6 +78,11 @@ final class KStream private (
     * branch only (branch/branch.go:65-86: `break` after first match);
     * non-matching records are dropped. Branch i keeps rows where
     * `p_i AND NOT p_1 … AND NOT p_{i-1}` (NULL = not matched).
+    *
+    * Cost: each branch is its own filter over this stream, so a topology
+    * that uses N branches scans the source N times (a streaming query's
+    * `numInputRows` counts each record N times). [[branchTag]] tags each
+    * record in one scan instead.
     */
   def branch(preds: Column*): Seq[KStream] =
     preds.zipWithIndex.map { case (p, i) =>

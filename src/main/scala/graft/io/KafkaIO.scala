@@ -16,9 +16,22 @@ object KafkaIO {
     * (kstream/k_source.go:51-67). `keyExpr`/`valueExpr` play the role of the
     * reference's Encoder.Decode (encoding/encoder.go:10-15) — e.g.
     * `from_json(col("value").cast("string"), schema)` for a JSON topic.
+    *
+    * `valueExpr` runs exactly once per record, whatever filters or branches
+    * sit above the decoded frame. Left as a plain projection, Catalyst's
+    * predicate pushdown would copy it into every predicate that reads a
+    * decoded field, so each `branch` leg's and `filter`'s condition would
+    * parse the record again, and the leg's projection once more. `value`
+    * therefore passes through a one-row generator: no predicate on a
+    * generator's output is pushed below it. `array(value)` is never null,
+    * so every record yields exactly one row, a NULL value (a tombstone)
+    * and an undecodable one included. The decoder stays in the projection
+    * beneath the generator, not in its expression, which keeps the
+    * generator in whole-stage codegen.
     */
   def decode(raw: DataFrame, keyExpr: Column, valueExpr: Column): DataFrame =
     raw.withColumn("key", keyExpr).withColumn("value", valueExpr)
+      .withColumn("value", explode(array(col("value"))))
 
   /** S2 sink framing: KSink encodes key/value and applies the tombstone
     * filter — a record whose tombstone predicate fires is produced with a

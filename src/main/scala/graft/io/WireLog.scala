@@ -34,8 +34,10 @@ import org.apache.spark.sql.types._
   * one-segment-per-batch equivalence). Offsets are contiguous per
   * (topic, partition) across segments — exactly a broker partition's log —
   * assigned with a per-partition `row_number` continued from the log's
-  * current end offsets (a ≤#partitions-row bounded read, never data-sized
-  * on the driver).
+  * current end offsets. Finding those scans the `offset` column of every
+  * segment so far, so its cost grows with the log; only its result, one
+  * row per (topic, partition), is bounded, and it never comes to the
+  * driver.
   *
   * Scale note: the per-partition offset window shuffles one append's rows
   * by (topic, partition) — inherent to the contract being modeled (a Kafka
@@ -110,7 +112,8 @@ object WireLog {
       if (cols.contains("headers")) withTs
       else withTs.withColumn("headers", array().cast(headerType))
 
-    // end offset per (topic, partition) — bounded at #partitions rows
+    // end offset per (topic, partition): reads every segment's offset
+    // column, yields one row per partition
     val ends = endOffsets(spark, dir)
     val ord = if (orderBy.nonEmpty) orderBy else Seq(xxhash64(col("key")))
     val w = Window.partitionBy(col("topic"), col("partition")).orderBy(ord: _*)
@@ -221,7 +224,8 @@ object WireLog {
       .toSeq.sortBy(_.getFileName.toString)
 
   /** Current end offset per (topic, partition) as `_end` — what the broker
-    * knows as the log-end offset; ≤ one row per partition ever exists.
+    * knows as the log-end offset. It aggregates the `offset` column of
+    * every segment in the log; only the result is one row per partition.
     */
   private def endOffsets(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir).groupBy("topic", "partition")

@@ -1,7 +1,6 @@
 package graft.state
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
@@ -67,29 +66,28 @@ private[state] final class KeyedStore private (
   }
 
   /** The rows a point lookup on the head key can match, as a one-partition
-    * frame over the one map the key hashes to; `None` where the key does
-    * not cast to the head key's type, which a filter over [[view]] then
-    * reports as it does for any store.
+    * frame over the one map the key hashes to. A key that does not cast to
+    * the head key's type matches no row, so its frame is empty.
     */
-  def point(key: String): Option[DataFrame] = {
+  def point(key: String): DataFrame = {
     val head = schema(keyCols.head).dataType
-    val mode = if (spark.conf.get("spark.sql.ansi.enabled").toBoolean) EvalMode.ANSI
-      else EvalMode.LEGACY
     val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
-    Try(Cast(Literal(key), head, tz, mode).eval()).toOption.map { v =>
-      val probe = UnsafeProjection.create(Array(head)).apply(InternalRow(v)).copy()
-      val pid = partitioner.getPartition(probe)
-      val (n, single) = (this.n, keyCols.size == 1)
-      val sameHead = new InterpretedOrdering(
-        Seq(SortOrder(BoundReference(0, head, nullable = true), Ascending)))
-      val hits = PartitionPruningRDD.create(parts, _ == pid)
-        .mapPartitions(_.flatMap { m =>
-          if (single) Option(m.get(probe)).iterator
-          else m.entrySet.iterator.asScala
-            .collect { case e if sameHead.compare(e.getKey, probe) == 0 => e.getValue }
-        }.map(e => e.getStruct(1, n): InternalRow))
-      RowsFrame(spark, DataTypeUtils.toAttributes(schema), hits, SinglePartition)
+    val hits = Option(Cast(Literal(key), head, tz, EvalMode.TRY).eval()) match {
+      case None => spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      case Some(v) =>
+        val probe = UnsafeProjection.create(Array(head)).apply(InternalRow(v)).copy()
+        val pid = partitioner.getPartition(probe)
+        val (n, single) = (this.n, keyCols.size == 1)
+        val sameHead = new InterpretedOrdering(
+          Seq(SortOrder(BoundReference(0, head, nullable = true), Ascending)))
+        PartitionPruningRDD.create(parts, _ == pid)
+          .mapPartitions(_.flatMap { m =>
+            if (single) Option(m.get(probe)).iterator
+            else m.entrySet.iterator.asScala
+              .collect { case e if sameHead.compare(e.getKey, probe) == 0 => e.getValue }
+          }.map(e => e.getStruct(1, n): InternalRow))
     }
+    RowsFrame(spark, DataTypeUtils.toAttributes(schema), hits, SinglePartition)
   }
 }
 

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * Rows render via `Dataset.toJSON` (schema-faithful JSON). A point
   * lookup is an equality filter on the store's key column, collected to
-  * the driver. On an upserted store it filters the one partition the key
+  * the driver; a key that does not cast to that column's type answers
+  * `[]`. On an upserted store it filters the one partition the key
   * hashes to, in which the key's row is a hash-map hit
   * ([[StoreRegistry.pointRows]]), so it runs one task over at most the
   * rows sharing its head key. On a registered store it filters the whole
@@ -114,8 +115,10 @@ final class StoreHttp(
       case "stores" :: s :: key :: Nil =>
         val df = storeOr404(s)
         val k = registry.keyOf(s)
+        // a key that does not cast to the key column's type matches no
+        // row, under ANSI too: it is outside input, not a failure
         (200, rows(registry.pointRows(s, key).getOrElse(df)
-          .filter(col(k) === lit(key).cast(df.schema(k).dataType))))
+          .filter(col(k) === lit(key).try_cast(df.schema(k).dataType))))
       case "stores" :: s :: "indexes" :: i :: key :: Nil =>
         val df = storeOr404(s)
         val expr = indexes.getOrElse((s, i), throw Refused(404, s"unknown index $i"))

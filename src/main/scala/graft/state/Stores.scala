@@ -71,7 +71,7 @@ final class StoreRegistry(spark: SparkSession) {
     * registered one, whose whole frame is filtered instead.
     */
   def pointRows(name: String, key: String): Option[DataFrame] =
-    keyed.get(name).flatMap(_.point(key))
+    keyed.get(name).map(_.point(key))
 
   private def publish(name: String, df: DataFrame): Unit = {
     stores.put(name, df)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.{KafkaIO, WireLog}
 
@@ -54,6 +55,36 @@ class KafkaIOSpec extends SparkSpec {
       .select(KafkaIO.partitionRandom(4).as("p")).as[Int].collect()
     assert(ps.forall(p => p >= 0 && p < 4))
     assert(ps.distinct.length === 4, "500 draws must touch all 4 partitions")
+  }
+
+  test("decode keeps every record: a tombstone and malformed JSON decode to NULL fields") {
+    val dir = tmp()
+    WireLog.append(spark, dir,
+      Seq(("1", Some("""{"v":1}""")), ("2", None), ("3", Some("{not json")),
+        ("4", Some("""{"v":4}""")))
+        .toDF("key", "value").withColumn("topic", lit("t")),
+      orderBy = Seq(col("key")))
+    def decoded(raw: org.apache.spark.sql.DataFrame) = KafkaIO.decode(raw,
+      col("key").cast("string"),
+      from_json(col("value").cast("string"), StructType.fromDDL("v INT")))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("key"), col("value.v"), col("value").isNull)
+        .as[(String, Option[Int], Boolean)].collect().sortBy(_._1).toSeq
+    // a tombstone's value is NULL; from_json reads malformed JSON as a
+    // struct of NULLs
+    val want = Seq(("1", Some(1), false), ("2", None, true), ("3", None, false),
+      ("4", Some(4), false))
+
+    val raw = WireLog.read(spark, dir)
+    assert(decoded(raw).count() === raw.count())
+    assert(rows(decoded(raw)) === want)
+
+    val q = decoded(WireLog.readStream(spark, dir))
+      .writeStream.format("memory").queryName("decode_rows_sink").start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = spark.table("decode_rows_sink")
+    assert(streamed.count() === raw.count())
+    assert(rows(streamed) === want)
   }
 
   test("wire log append: per-partition offsets contiguous from 0 across appends") {

@@ -1,5 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.dsl.{KGlobalTable, KStream}
+import graft.io.{KafkaIO, WireLog}
 import graft.plans.PlanChecks._
 
 /** Scale properties asserted at the plan level: these are the shapes the
@@ -428,6 +437,22 @@ class PlanShapeSpec extends SparkSpec {
     assert(countNodes(df, "CartesianProduct") === 0)
     assert(countNodes(df, "BroadcastNestedLoopJoin") === 0)
     assert(countNodes(df, "Union") >= 1, "merge must plan as a union")
+  }
+
+  test("decode: one from_json per source scan under branch → filter → join, none in a filter") {
+    import PlanShapeSpec._
+    val dir = java.nio.file.Files.createTempDirectory("graft_decode_plan").toString
+    appendTxns(spark, dir)
+    val out = decodedTopology(spark, WireLog.read(spark, dir))
+    val plan = out.queryExecution.executedPlan
+    val d = decodes(plan)
+    assert(d.scans === 2, s"one scan per branch leg:\n$plan")
+    assert(d.fromJson === d.scans, s"the value must decode once per scanned record:\n$plan")
+    assert(d.inFilters === 0, s"a filter re-parses the value:\n$plan")
+    // in the generator itself, the decoder would take it out of codegen
+    assert(d.inGenerators === 0, s"the decoder belongs beneath the generator:\n$plan")
+    assert(out.select("txn_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted.toSeq === Seq(1L, 2L))
   }
 
   test("pii scrub: narrow — no shuffle, no join, filters stay codegen'd") {
@@ -1343,5 +1368,60 @@ class PlanShapeSpec extends SparkSpec {
       s"expected one LeftOuter hash join per probe slot:\n${formatted(df)}")
     assert(countNodes(df, "SortMergeJoin") === 0)
     assert(countNodes(df, "Window") === 0)
+  }
+}
+
+object PlanShapeSpec extends AdaptiveSparkPlanHelper {
+
+  private val txn = StructType.fromDDL("typ STRING, acct BIGINT, ts_ms BIGINT")
+
+  /** Appends one segment of JSON transactions to the wire log at `dir`:
+    * two that reach the sink, and one each that the branch, the filter and
+    * the join drop.
+    */
+  def appendTxns(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    WireLog.append(spark, dir,
+      Seq((1L, "credit", 10L, 5L), (2L, "debit", 20L, 6L), (3L, "refund", 10L, 7L),
+        (4L, "credit", 10L, 0L), (5L, "debit", 99L, 8L))
+        .toDF("id", "typ", "acct", "ts_ms")
+        .select(col("id").cast("string").as("key"),
+          to_json(struct(col("typ"), col("acct"), col("ts_ms"))).as("value"),
+          lit("txns").as("topic"), col("id").as("seq")),
+      numPartitions = 2, orderBy = Seq(col("seq")))
+  }
+
+  /** The enrich_drain shape over a raw wire frame: decode → branch
+    * (credit, debit) → filter on a decoded field → global-table join, the
+    * two legs merged.
+    */
+  def decodedTopology(spark: SparkSession, raw: DataFrame): DataFrame = {
+    import spark.implicits._
+    val decoded = KafkaIO.decode(raw, col("key").cast("string").cast("long"),
+      from_json(col("value").cast("string"), txn))
+    val src = KStream(decoded.select(col("key").as("txn_id"), col("value.typ").as("typ"),
+      col("value.acct").as("acct"), col("value.ts_ms").as("ts_ms")), "txn_id")
+    val accounts = KGlobalTable.fromStatic(
+      Seq((10L, "savings"), (20L, "checking")).toDF("acct_no", "kind"), "acct_no")
+    val Seq(credited, debited) = src.branch(col("typ") === "credit", col("typ") === "debit")
+    def leg(s: KStream): KStream =
+      s.filter(col("ts_ms") >= 1L).joinGlobalTable(accounts, col("acct"))
+    leg(credited).merge(leg(debited)).toDF
+  }
+
+  final case class Decodes(scans: Int, fromJson: Int, inFilters: Int, inGenerators: Int)
+
+  /** File scans, `from_json` calls, and filters and generators whose own
+    * expression calls `from_json`, in `plan`, adaptive stages and
+    * broadcasts included.
+    */
+  def decodes(plan: SparkPlan): Decodes = {
+    def calls(e: Expression): Int =
+      e.collect { case j: JsonToStructs => j }.size
+    Decodes(
+      collectWithSubqueries(plan) { case s: FileSourceScanExec => s }.size,
+      collectWithSubqueries(plan) { case n => n.expressions.map(calls).sum }.sum,
+      collectWithSubqueries(plan) { case f: FilterExec if calls(f.condition) > 0 => f }.size,
+      collectWithSubqueries(plan) { case g: GenerateExec if calls(g.generator) > 0 => g }.size)
   }
 }

@@ -62,6 +62,29 @@ class StreamingOpsSpec extends SparkSpec {
     assert(rows("2").contains("\"checking\"") && rows("2").contains("\"size\":1"))
   }
 
+  test("example_1 topology over a decoded wire stream: one from_json per scan, none in a filter") {
+    // the batch case is PlanShapeSpec's; a micro-batch plans the same
+    // topology again on every trigger, so the decode count is read from
+    // the last batch's executed plan
+    import graft.io.WireLog
+    import PlanShapeSpec._
+    val dir = java.nio.file.Files.createTempDirectory("graft_decode_stream").toString
+    appendTxns(spark, s"$dir/log")
+    val out = decodedTopology(spark, WireLog.readStream(spark, s"$dir/log"))
+    val q = out.writeStream.format("memory").queryName("decode_once_sink").start()
+    val plan = try {
+      q.processAllAvailable()
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+    } finally q.stop()
+    val d = decodes(plan)
+    assert(d.scans === 2, s"one scan per branch leg:\n$plan")
+    assert(d.fromJson === d.scans, s"the value must decode once per scanned record:\n$plan")
+    assert(d.inFilters === 0, s"a filter re-parses the value:\n$plan")
+    assert(spark.table("decode_once_sink").select("txn_id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L))
+  }
+
   test("example_1 banking topology end-to-end: one streaming query, checkpoint restart mid-stream") {
     // the COMPLETE example_1 shape (/root/reference/examples/example_1/
     // stream/init.go:24-89, account_credited.go:24-40, account_debited.go):
