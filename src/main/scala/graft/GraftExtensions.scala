@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GlobalTableJoins, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -8,12 +8,15 @@ import graft.functions.{BloomAgg, BloomContains, BloomUnionAgg, BoundedTopK, Cap
 
 /** Engine extension installer: `spark.sql.extensions=graft.GraftExtensions`
   * (or `builder.withExtensions`) registers the engine's native expressions
-  * in every session — the standard deployment route for custom Catalyst
-  * functions.
+  * and the global-table join strategy ([[GlobalTableJoins]]) in every
+  * session — the standard deployment route for custom Catalyst functions
+  * and planner strategies.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => GlobalTableJoins)
+  }
 }
 
 object GraftExtensions {
@@ -85,5 +88,6 @@ object GraftExtensions {
     functions.foreach { case (id, info, builder) =>
       if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
+    GlobalTableJoins.install(spark)
   }
 }

@@ -1,8 +1,9 @@
 package graft.dsl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GlobalTableBroadcasts, GlobalTableJoins}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Hints
 import graft.state.Upserts
 
 /** Spark-native GlobalTable: the reference's fully-replicated latest-value-
@@ -11,22 +12,32 @@ import graft.state.Upserts
   * becomes a broadcast of the snapshot to every executor — same data
   * placement, but built by the cluster instead of N redundant topic scans.
   *
-  * Scale: the broadcast is *advisory* — `useBroadcast` attaches the hint
-  * only while the snapshot's optimizer size estimate fits under
+  * Read once, like the reference's bootstrap: a broadcast snapshot is
+  * collected, hashed and broadcast the first time a join over it runs, and
+  * every later run of that join — each micro-batch of a streaming query,
+  * each batch query that joins the table — reuses that relation
+  * ([[org.apache.spark.sql.GlobalTableJoins]]). So rows added to the
+  * table's files afterwards are not seen by joins over this table; a table
+  * that changes while a stream runs is re-read per batch with
+  * [[graft.streaming.GlobalTableRefresh]], where each `load()` makes a new
+  * table. The relation lives as long as this table (and the plans that
+  * join it) and is freed by the ContextCleaner once they are unreachable.
+  *
+  * Scale: the broadcast is *advisory* — `useBroadcast` applies only while
+  * the snapshot's optimizer size estimate fits under
   * `spark.graft.broadcastThreshold` (default: the session's
   * `autoBroadcastJoinThreshold`, see [[graft.plans.Hints.broadcastIfSmall]]).
-  * Past that no hint is attached and the join degrades gracefully to a
-  * shuffled join chosen by the planner/AQE — which the reference cannot do
-  * at all (its tables must fit in every instance's RAM,
-  * backend/memory/memory.go:52-180).
+  * Past that, or with `broadcastSnapshot = false`, the join is left to the
+  * planner/AQE and degrades gracefully to a shuffled join — which the
+  * reference cannot do at all (its tables must fit in every instance's RAM,
+  * backend/memory/memory.go:52-180) — re-reading the table per execution.
   */
 final class KGlobalTable private (
     val snapshot: DataFrame,
     val keyCol: String,
     useBroadcast: Boolean) {
 
-  private def side: DataFrame =
-    if (useBroadcast) graft.plans.Hints.broadcastIfSmall(snapshot) else snapshot
+  private val broadcasts = new GlobalTableBroadcasts
 
   /** J1 (inner) / J2 (left) stream–global-table join
     * (processors/join/global_table_joiner.go:94-127). `fk` is the stream-
@@ -39,7 +50,11 @@ final class KGlobalTable private (
   def join(stream: DataFrame, fk: Column, joinType: String = "inner"): DataFrame = {
     require(joinType == "inner" || joinType == "left" || joinType == "left_outer",
       s"global-table joins are inner or left (got $joinType)")
-    val t = side
+    val t =
+      if (useBroadcast && Hints.fitsBroadcast(snapshot)) {
+        GlobalTableJoins.install(stream.sparkSession)
+        broadcast(GlobalTableJoins.mark(snapshot, broadcasts))
+      } else snapshot
     stream.join(t, fk === t(keyCol), joinType)
   }
 

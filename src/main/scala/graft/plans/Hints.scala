@@ -55,12 +55,13 @@ object Hints {
     * frame is returned unhinted, so the planner/AQE choose a strategy from
     * real sizes — the graceful degradation a forced hint forecloses.
     */
-  def broadcastIfSmall(df: DataFrame): DataFrame = {
+  def broadcastIfSmall(df: DataFrame): DataFrame =
+    if (fitsBroadcast(df)) broadcast(df) else df
+
+  /** Whether [[broadcastIfSmall]] hints `df`. */
+  def fitsBroadcast(df: DataFrame): Boolean = {
     val limit = thresholdBytes(df)
-    if (limit > 0 &&
-        df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limit))
-      broadcast(df)
-    else df
+    limit > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limit)
   }
 
   /** Bloom-gated equi-join: collapse the build side's join keys to ONE

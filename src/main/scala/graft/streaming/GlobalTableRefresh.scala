@@ -8,12 +8,13 @@ import graft.dsl.KGlobalTable
 
 /** The reference's GlobalTable stays continuously synced from its topic and
   * every stream record joins against the CURRENT table state
-  * (`/root/reference/kstream/global_table_stream.go:64-176`, SURVEY §3.3).
+  * (`kstream/global_table_stream.go:64-176`, SURVEY §3.3).
   * The Spark form: re-materialize the snapshot per micro-batch inside
   * `foreachBatch` — each batch joins the freshest table, broadcast to
   * executors by the join itself. For slow-changing dims, swap `load` for a
   * cached loader with a TTL; for truly static dims use the plain
-  * stream-static join (Spark re-plans it per batch anyway).
+  * stream-static `joinGlobalTable`, which reads the table once per query
+  * and reuses its broadcast on every batch (see [[graft.dsl.KGlobalTable]]).
   */
 object GlobalTableRefresh {
 

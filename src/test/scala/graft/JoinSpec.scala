@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GlobalTableJoins
 import org.apache.spark.sql.functions._
 
 import graft.dsl.{KGlobalTable, KStream}
@@ -154,5 +155,54 @@ class JoinSpec extends SparkSpec {
       assert(banded.toSet === naive, s"band=$band diverges from naive")
       assert(banded.length === naive.size, s"band=$band duplicated matches")
     }
+  }
+
+  test("joinGlobalTable equals the plain join row for row, inner and left") {
+    // a wide parquet dim whose BIGINT key 3 repeats and one key is NULL; the
+    // table keeps two of its columns, and the stream's INT fk casts to BIGINT
+    val dir = java.nio.file.Files.createTempDirectory("graft_gt_dim").toString
+    Seq[(Option[Long], String, String)](
+      (Some(1L), "one", "w"), (Some(2L), "two", "w"), (Some(3L), "three-a", "w"),
+      (Some(3L), "three-b", "w"), (None, "no key", "w"))
+      .toDF("k", "name", "wide").write.mode("overwrite").parquet(dir)
+    val snapshot = spark.read.parquet(dir).select("k", "name")
+    val table = KGlobalTable.fromStatic(snapshot, "k")
+    // a NULL fk, an unmatched fk (9), two records on the duplicated key
+    val events = Seq((1, Some(1)), (2, Some(2)), (3, None), (4, Some(9)), (5, Some(3)), (6, Some(3)))
+      .toDF("id", "fk")
+    eachAqe { aqe =>
+      for (jt <- Seq("inner", "left")) {
+        val viaTable = KStream(events, "id").joinGlobalTable(table, col("fk"), jt).toDF
+        val plain = events.join(snapshot, events("fk") === snapshot("k"), jt)
+        assert(sortedRows(viaTable) === sortedRows(plain), s"$jt join, AQE $aqe")
+        assert(viaTable.columns.toSeq === Seq("id", "fk", "k", "name"))
+      }
+    }
+    val inner = KStream(events, "id").joinGlobalTable(table, col("fk")).toDF.select("id", "name")
+    assert(sortedRows(inner) === Seq(
+      "[1,one]", "[2,two]", "[5,three-a]", "[5,three-b]", "[6,three-a]", "[6,three-b]"))
+  }
+
+  test("starJoin over two global tables equals the plain two-join chain") {
+    val orders = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
+    val cust = spark.read.parquet(s"$sf/customer.parquet").select("c_custkey", "c_nationkey")
+    val nation = spark.read.parquet(s"$sf/nation.parquet").select("n_nationkey", "n_name")
+    eachAqe { aqe =>
+      val viaTables = KStream(orders, "o_orderkey").starJoin(
+        KGlobalTable.fromStatic(cust, "c_custkey") -> col("o_custkey"),
+        KGlobalTable.fromStatic(nation, "n_nationkey") -> col("c_nationkey")).toDF
+      val plain = orders.join(cust, col("o_custkey") === col("c_custkey"))
+        .join(nation, col("c_nationkey") === col("n_nationkey"))
+      val got = sortedRows(viaTables)
+      assert(got.nonEmpty)
+      assert(got === sortedRows(plain), s"AQE $aqe")
+    }
+  }
+
+  test("installing the global-table strategy twice leaves one instance") {
+    GlobalTableJoins.install(spark)
+    GlobalTableJoins.install(spark)
+    GraftExtensions.ensure(spark)
+    assert(spark.experimental.extraStrategies.count(_ eq GlobalTableJoins) === 1)
   }
 }

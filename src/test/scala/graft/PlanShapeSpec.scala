@@ -439,6 +439,71 @@ class PlanShapeSpec extends SparkSpec {
     assert(countNodes(df, "Union") >= 1, "merge must plan as a union")
   }
 
+  test("global-table joins plan broadcast hash joins over a build-once side, no broadcast exchange") {
+    import org.apache.spark.sql.GlobalTableBroadcastExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import PlanShapeSpec._
+    val orders = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
+    val cust = spark.read.parquet(s"$sf/customer.parquet").select("c_custkey", "c_nationkey")
+    val nation = spark.read.parquet(s"$sf/nation.parquet").select("n_nationkey", "n_name")
+    eachAqe { aqe =>
+      val viaTables = KStream(orders, "o_orderkey").starJoin(
+        KGlobalTable.fromStatic(cust, "c_custkey") -> col("o_custkey"),
+        KGlobalTable.fromStatic(nation, "n_nationkey") -> col("c_nationkey")).toDF
+      val plain = orders.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
+      // executed, so the adaptive plan is the final one
+      viaTables.collect()
+      plain.collect()
+      def joins(df: DataFrame) =
+        collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+      def exchanges(df: DataFrame) =
+        collect(df.queryExecution.executedPlan) { case e: BroadcastExchangeExec => e }
+      val plan = viaTables.queryExecution.executedPlan
+      assert(joins(viaTables).size === 2, s"AQE $aqe:\n$plan")
+      assert(joins(viaTables).size === joins(plain).size)
+      assert(joins(viaTables).forall(_.right.exists(_.isInstanceOf[GlobalTableBroadcastExec])),
+        s"AQE $aqe: every table join builds from the table's own broadcast:\n$plan")
+      assert(exchanges(viaTables).isEmpty, s"AQE $aqe:\n$plan")
+      assert(exchanges(plain).size === 2)
+    }
+  }
+
+  test("threshold 0 or broadcastSnapshot = false: the global-table join takes the plain planner path") {
+    import org.apache.spark.sql.{GlobalTableBroadcastExec, GlobalTableSnapshot}
+    import graft.plans.Hints
+    import PlanShapeSpec._
+    val orders = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
+    val cust = spark.read.parquet(s"$sf/customer.parquet").select("c_custkey", "c_name")
+    def joined(table: KGlobalTable) =
+      KStream(orders, "o_orderkey").joinGlobalTable(table, col("o_custkey")).toDF
+    def marked(df: DataFrame) =
+      df.queryExecution.analyzed.exists(_.isInstanceOf[GlobalTableSnapshot]) ||
+        collect(df.queryExecution.executedPlan) { case g: GlobalTableBroadcastExec => g }.nonEmpty
+    val small = joined(KGlobalTable.fromStatic(cust, "c_custkey"))
+    assert(marked(small))
+    val optOut = joined(KGlobalTable.fromStatic(cust, "c_custkey", broadcastSnapshot = false))
+    assert(!marked(optOut))
+    val unbounded =
+      try {
+        spark.conf.set(Hints.ThresholdConf, "0")
+        joined(KGlobalTable.fromStatic(cust, "c_custkey"))
+      } finally spark.conf.unset(Hints.ThresholdConf)
+    assert(!marked(unbounded))
+    assert(sortedRows(optOut) === sortedRows(small))
+    assert(sortedRows(unbounded) === sortedRows(small))
+  }
+
+  test("a filter on a global table's snapshot still reaches the stream side's scan") {
+    val orders = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
+    val cust = spark.read.parquet(s"$sf/customer.parquet").filter(col("c_custkey") > 10)
+    val joined = KStream(orders, "o_orderkey")
+      .joinGlobalTable(KGlobalTable.fromStatic(cust, "c_custkey"), col("o_custkey")).toDF
+    assert(pushedFilters(joined).exists(_.contains("GreaterThan(o_custkey,10)")),
+      formatted(joined))
+  }
+
   test("decode: one from_json per source scan under branch → filter → join, none in a filter") {
     import PlanShapeSpec._
     val dir = java.nio.file.Files.createTempDirectory("graft_decode_plan").toString

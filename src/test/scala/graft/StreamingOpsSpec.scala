@@ -1,9 +1,12 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dsl.KGlobalTable
 import graft.streaming.{GlobalTableRefresh, MetricsListener, Resilience}
@@ -32,6 +35,100 @@ class StreamingOpsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(collected.toSeq === Seq((1, "v1"), (1, "v2")))
+  }
+
+  test("GlobalTableRefresh re-reads a table whose files change between micro-batches") {
+    // unlike the in-memory case above, `load` plans the same table every
+    // batch and only its files change, so a broadcast kept across loads
+    // would still join the first version
+    val dir = java.nio.file.Files.createTempDirectory("graft_refresh_dim").toString
+    def publish(name: String): Unit =
+      Seq((1, name)).toDF("k", "name").write.mode("overwrite").parquet(dir)
+    publish("v1")
+    val collected = mutable.Buffer.empty[(Int, String)]
+    val mem = MemoryStream[Int]
+    val q = GlobalTableRefresh.enrichEachBatch(
+      mem.toDF().toDF("fk"),
+      () => KGlobalTable.fromStatic(spark.read.parquet(dir), "k"),
+      col("fk")) { (batch, _) =>
+        collected.synchronized {
+          collected ++= batch.select("fk", "name").as[(Int, String)].collect()
+        }
+      }.start()
+    try {
+      mem.addData(1)
+      q.processAllAvailable()
+      publish("v2")
+      mem.addData(1)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(collected.toSeq === Seq((1, "v1"), (1, "v2")))
+  }
+
+  /** Spark jobs per micro-batch of the query `start` starts, counted after
+    * `drive` returns and the query stops.
+    */
+  private def jobsPerBatch(start: => StreamingQuery)(drive: StreamingQuery => Unit): Map[Long, Int] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val marker = java.util.UUID.randomUUID().toString
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (p.getProperty("graft.test.drained") == marker) drained.countDown()
+        Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+          jobs.add(p.getProperty("sql.streaming.queryId") -> b.toLong))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val q = start
+      try drive(q) finally q.stop()
+      // listener events arrive in order: once this job is seen, so are the query's
+      sc.setLocalProperty("graft.test.drained", marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drained", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.asScala.toSeq.filter(_._1 == q.id.toString).groupBy(_._2).map { case (b, js) => b -> js.size }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a static global table is broadcast once per query, not once per micro-batch") {
+    import graft.dsl.KStream
+    val dir = java.nio.file.Files.createTempDirectory("graft_gt_once").toString
+    Seq((10L, "savings", 1), (20L, "checking", 2), (30L, "loan", 1))
+      .toDF("acct", "kind", "region").write.parquet(s"$dir/accounts")
+    Seq((1, "north"), (2, "south")).toDF("region_id", "region_name").write.parquet(s"$dir/regions")
+    val accounts = spark.read.parquet(s"$dir/accounts")
+    val regions = spark.read.parquet(s"$dir/regions")
+    // the enrich_drain shape: branch, then two table joins on each leg
+    def run(name: String)(legs: KStream => KStream): (Map[Long, Int], Seq[String]) = {
+      val mem = MemoryStream[(Long, Long, Double)]
+      val src = KStream(mem.toDF().toDF("txn_id", "acct_fk", "amount"), "txn_id")
+      val Seq(large, small) = src.branch(col("amount") >= 100, col("amount") < 100)
+      val out = legs(large).merge(legs(small)).toDF
+      val jobs = jobsPerBatch(out.writeStream.format("memory").queryName(name).start()) { q =>
+        for (b <- 0 until 5) {
+          mem.addData((b * 10L + 1, 10L, 250.0), (b * 10L + 2, 20L, 5.0),
+            (b * 10L + 3, 30L, 100.0), (b * 10L + 4, 99L, 7.0))
+          q.processAllAvailable()
+        }
+      }
+      (jobs, sortedRows(spark.table(name)))
+    }
+    val accountTable = KGlobalTable.fromStatic(accounts, "acct")
+    val regionTable = KGlobalTable.fromStatic(regions, "region_id")
+    val (viaTables, tableRows) = run("gt_once_sink")(_
+      .joinGlobalTable(accountTable, col("acct_fk"))
+      .joinGlobalTable(regionTable, col("region")))
+    val (plain, plainRows) = run("gt_plain_sink")(s => KStream(s.toDF
+      .join(broadcast(accounts), col("acct_fk") === col("acct"))
+      .join(broadcast(regions), col("region") === col("region_id")), "txn_id"))
+    assert(tableRows.size === 15) // 3 of 4 records per batch find an account
+    assert(tableRows === plainRows)
+    assert(viaTables.keySet === (0L until 5L).toSet && plain.keySet === viaTables.keySet)
+    for (b <- 1L until 5L)
+      assert(plain(b) - viaTables(b) === 2,
+        s"batch $b: $viaTables jobs per batch with global tables, $plain with the plain join")
   }
 
   test("KStream DSL composes unchanged on a STREAMING frame (example_1 topology)") {

@@ -27,4 +27,16 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** `df`'s rows as sorted strings, for comparing two frames as multisets. */
+  protected def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Runs `body` under AQE on, then off, and restores the setting. */
+  protected def eachAqe(body: String => Unit): Unit = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { v => spark.conf.set(key, v); body(v) }
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -18,13 +18,15 @@
 #   7. no `batch=$` / `/v=$` artifact-path literal in src/main outside
 #      state/Artifacts.scala
 #   8. no `.rdd` / `createDataFrame(` in src/main/scala/graft/state
-#   9. git status --porcelain          (tree clean apart from the staged
+#   9. no `extraStrategies` assignment outside
+#      org/apache/spark/sql/GlobalTableJoins.scala
+#  10. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
 # Usage: tools/gate.sh [sfDir]           (default /root/testdata/sf0.01)
 #   GATE_SKIP_TESTS=1   skip step 1 (when sbt test just ran unchanged)
-#   GATE_ALLOW_DIRTY=1  demote step 8 to a warning (mid-round iteration)
+#   GATE_ALLOW_DIRTY=1  demote step 10 to a warning (mid-round iteration)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -105,6 +107,20 @@ stray="$(grep -rnE '\.rdd([^.A-Za-z0-9_]|$)|createDataFrame\(' src/main/scala/gr
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "build these frames with org.apache.spark.sql.RowsFrame"
+  fail=1
+else
+  echo "ok"
+fi
+
+# planner strategies reach a session one way: GlobalTableJoins.install
+# (idempotent, also behind GraftExtensions.ensure) or the extension's
+# injectPlannerStrategy, so no other file appends to extraStrategies
+step "extraStrategies assigned only in GlobalTableJoins.scala"
+stray="$(grep -rnE 'extraStrategies(_=|\s*(\+\+|:\+|\+:)?=([^=]|$))' src perfbench/src |
+  grep -v '^src/main/scala/org/apache/spark/sql/GlobalTableJoins\.scala:')"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "install planner strategies through org.apache.spark.sql.GlobalTableJoins.install"
   fail=1
 else
   echo "ok"
