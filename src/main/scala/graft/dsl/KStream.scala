@@ -124,22 +124,24 @@ final class KStream private (
 
   /** S4 Materialize — upsert latest-by-key into a named store AND forward
     * the stream downstream unchanged (k_stream.go:558-573,
-    * processors/materializer.go:25-94). The "store" is a registered view
-    * over the keyed snapshot; `ord` orders arrivals (e.g. offset column).
+    * processors/materializer.go:25-94). The store is the keyed store of
+    * [[StoreRegistry.upsert]]: the row with the greatest `ord` (e.g. the
+    * offset column) per key. A later call on the same name merges into
+    * that store rather than replacing it, and a frame whose columns differ
+    * from the store's fails naming the column. Each call runs one Spark
+    * job and keeps the new version's rows (an eager snapshot, not a lazy
+    * view). Keys compare by their bytes, as the reference's `[]byte` keys
+    * do, so a float key column is refused. The optimistic-versioning form
+    * (materializer.go:65-80: the greatest version wins, ties keep the
+    * earliest arrival) is `ord = Seq(version, -arrival)`.
+    *
+    * A streaming frame is refused: each micro-batch is upserted from
+    * `writeStream.foreachBatch` instead.
     */
   def materialize(registry: StoreRegistry, storeName: String, ord: Seq[Column]): KStream = {
-    registry.register(storeName, Upserts.latestByKey(toDF, keyCols, ord), keyCols.head)
-    this
-  }
-
-  /** S4 with optimistic versioning (materializer.go:65-80): store keeps the
-    * record with the greatest version; strict `>` comparator so ties keep
-    * the earliest arrival.
-    */
-  def materializeVersioned(
-      registry: StoreRegistry, storeName: String,
-      version: Column, arrival: Column): KStream = {
-    registry.register(storeName, Upserts.versionedUpsert(toDF, keyCols, version, arrival))
+    require(!toDF.isStreaming, s"materialize($storeName) takes a batch frame: upsert each " +
+      "micro-batch of a stream with writeStream.foreachBatch and StoreRegistry.upsert")
+    registry.upsert(storeName, toDF, keyCols, ord)
     this
   }
 

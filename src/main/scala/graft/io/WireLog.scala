@@ -9,6 +9,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.state.Upserts
+
 /** A replayable, file-backed log speaking the Kafka WIRE contract — every
   * frame carries exactly the reference's record shape
   * (`/root/reference/data/record.go:33-42`: `Key, Value []byte; Topic
@@ -168,20 +170,15 @@ object WireLog {
     * replays in one micro-batch — exactly the "restore state, then
     * stream" bootstrap split (`global_table_stream.go:64-176`).
     *
-    * Plan shape: one groupBy (topic, partition, key) `max_by` partial
-    * aggregation — the engine's latest-by-key convention (map-side
-    * combine, no window sort), so compacting a 100 TB log is one shuffle
-    * of the key space.
+    * Plan shape: [[graft.state.Upserts.latestByKey]] over (topic,
+    * partition, key), one `max_by` partial aggregation — the engine's
+    * latest-by-key convention (map-side combine, no window sort), so
+    * compacting a 100 TB log is one shuffle of the key space.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
     val log = read(spark, dir)
     val ends = endOffsets(spark, dir)
-    val latest = log
-      .groupBy(col("topic"), col("partition"), col("key"))
-      .agg(max_by(
-        struct(recordSchema.fieldNames.map(col).toIndexedSeq: _*),
-        col("offset")).as("_rec"))
-      .select(col("_rec.*"))
+    val latest = Upserts.latestByKey(log, Seq("topic", "partition", "key"), Seq(col("offset")))
       .join(broadcast(ends), Seq("topic", "partition"), "left")
       // tombstones delete their key — EXCEPT the partition's final record,
       // which is retained (tombstone or not) so the log-end offset, and

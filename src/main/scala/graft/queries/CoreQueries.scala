@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dsl.{KGlobalTable, KStream}
 import graft.io.KafkaIO
-import graft.state.{StoreRegistry, Stores, Upserts}
+import graft.state.{Stores, Upserts}
 import graft.queries.Tables.t
 
 /** Batch instantiations of every SURVEY §2 operator over the driver
@@ -217,20 +217,18 @@ object CoreQueries {
         dead
       }),
 
-    // A1 / S4 materialize — latest record per key (global_table.go:31-60);
-    // one partial-agg shuffle (max_by), no window sort.
+    // A1 / S4 materialize, batch form — latest record per key
+    // (global_table.go:31-60); one partial-agg shuffle (max_by), no window
+    // sort. Not KStream.materialize: its keyed store is built eagerly by a
+    // shuffle of every row with no map-side combine, slower on a one-shot
+    // query.
     Q("q_latest_by_key", Some(
       "SELECT user_id, event_id, event_type, value FROM (" +
       "SELECT user_id, event_id, event_type, value, " +
       "row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn " +
       "FROM events) WHERE rn = 1"))(
-      (s, d) => {
-        val reg = new StoreRegistry(s)
-        KStream(t(s, d, "events"), "user_id")
-          .materialize(reg, "graft_latest_events", Seq(col("event_id")))
-        reg.store("graft_latest_events")
-          .select("user_id", "event_id", "event_type", "value")
-      }),
+      (s, d) => Upserts.latestByKey(t(s, d, "events"), Seq("user_id"), Seq(col("event_id")))
+        .select("user_id", "event_id", "event_type", "value")),
 
     // A1 with tombstones: key deleted iff its newest record is a tombstone
     Q("q_latest_tombstone", Some(

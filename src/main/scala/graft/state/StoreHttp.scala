@@ -6,7 +6,6 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
 
 /** Interactive queries over registered stores — the reference's REST
   * surface (`/root/reference/kstream/store/http.go:120-399`):
@@ -20,13 +19,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *   GET /meta                        → store→host discovery (meta.go analog)
   *
   * Rows render via `Dataset.toJSON` (schema-faithful JSON). A point
-  * lookup is an equality filter on the store's key column, collected to
-  * the driver; a key that does not cast to that column's type answers
-  * `[]`. On an upserted store it filters the one partition the key
-  * hashes to, in which the key's row is a hash-map hit
-  * ([[StoreRegistry.pointRows]]), so it runs one task over at most the
-  * rows sharing its head key. On a registered store it filters the whole
-  * frame, a predicate Spark pushes down to the scan. Built on the JDK's
+  * lookup is [[StoreRegistry.lookup]], collected to the driver: on an
+  * upserted store one task over the one partition the key hashes to, on
+  * a registered store a filter over the whole frame. Built on the JDK's
   * HttpServer: no dependencies, ephemeral port for tests.
   *
   * The HTTP layer is the one legitimately driver-side collect in the
@@ -83,9 +78,8 @@ final class StoreHttp(
           v.toIntOption.getOrElse(throw Refused(400, s"limit must be an integer, got '$v'"))
       }).getOrElse(1000)
       .max(0).min(maxScanLimit)
-    def storeOr404(s: String): DataFrame =
-      if (registry.storeNames.contains(s)) registry.store(s)
-      else throw Refused(404, s"unknown store $s")
+    def unknown(s: String) = Refused(404, s"unknown store $s")
+    def storeOr404(s: String): DataFrame = registry.get(s).getOrElse(throw unknown(s))
     parts match {
       case "meta" :: Nil =>
         // host-metadata discovery (`kstream/store/meta.go:10-81`): the
@@ -113,12 +107,7 @@ final class StoreHttp(
       case "stores" :: s :: Nil =>
         (200, rows(storeOr404(s).limit(limit)))
       case "stores" :: s :: key :: Nil =>
-        val df = storeOr404(s)
-        val k = registry.keyOf(s)
-        // a key that does not cast to the key column's type matches no
-        // row, under ANSI too: it is outside input, not a failure
-        (200, rows(registry.pointRows(s, key).getOrElse(df)
-          .filter(col(k) === lit(key).try_cast(df.schema(k).dataType))))
+        (200, rows(registry.lookup(s, key).getOrElse(throw unknown(s))))
       case "stores" :: s :: "indexes" :: i :: key :: Nil =>
         val df = storeOr404(s)
         val expr = indexes.getOrElse((s, i), throw Refused(404, s"unknown index $i"))

@@ -8,33 +8,30 @@ import org.apache.spark.sql.functions._
 /** Store registry + query surface: the batch analog of the reference's
   * store registry and HTTP interactive-query layer
   * (`/root/reference/kstream/store/registry.go:12-160`, store/http.go:120-399).
-  * A "store" is a named keyed DataFrame registered as a temp view, so
-  * `GET /stores/{s}/{key}` becomes a `WHERE key = ...` over it — the HTTP
-  * layer itself is a transport detail, not an engine capability.
+  * A "store" is a named keyed DataFrame registered as a temp view, and
+  * [[lookup]] answers `GET /stores/{s}/{key}` as a `WHERE key = ...` over
+  * it — the HTTP layer itself is a transport detail, not an engine
+  * capability.
   *
-  * A store fed by [[upsert]] is a [[KeyedStore]]: its rows are
-  * hash-partitioned on the first key column and indexed by key in each
-  * partition, as the reference keeps one local KV store per partition
-  * (store/store.go:151-173). Its frame declares
-  * `HashPartitioning(head, spark.sql.shuffle.partitions)`, and a point
-  * lookup reads the one map its key hashes to. A store added by
-  * [[register]] is any frame, read by filtering it.
+  * Each name holds one entry: the published frame, its key column and,
+  * for a store fed by [[upsert]] (`KStream.materialize` included), its
+  * [[KeyedStore]]. Such a store's rows are hash-partitioned on the first
+  * key column and indexed by key in each partition, as the reference
+  * keeps one local KV store per partition (store/store.go:151-173). Its
+  * frame declares `HashPartitioning(head, spark.sql.shuffle.partitions)`,
+  * and a point lookup reads the one map its key hashes to. A store added
+  * by [[register]] is any frame, read by filtering it whole.
   */
 final class StoreRegistry(spark: SparkSession) {
-  private val stores = TrieMap.empty[String, DataFrame]
-  private val keys = TrieMap.empty[String, String]
-  private val keyed = TrieMap.empty[String, KeyedStore]
+  /** A store: its published frame, its key column, and its keyed store
+    * if it was upserted.
+    */
+  private final case class Entry(df: DataFrame, keyCol: String, keyed: Option[KeyedStore])
 
-  def register(name: String, df: DataFrame): Unit = {
-    keyed.remove(name)
-    keys.putIfAbsent(name, df.columns.head)
-    publish(name, df)
-  }
+  private val entries = TrieMap.empty[String, Entry]
 
-  def register(name: String, df: DataFrame, keyCol: String): Unit = {
-    keys.put(name, keyCol)
-    register(name, df)
-  }
+  def register(name: String, df: DataFrame, keyCol: String): Unit =
+    publish(name, Entry(df, keyCol, None))
 
   /** Streaming materialize (S4): called per micro-batch from
     * `writeStream.foreachBatch` — merge the batch into the keyed store,
@@ -55,46 +52,42 @@ final class StoreRegistry(spark: SparkSession) {
     // foreachBatch hands us a DataFrame bound to a per-stream session
     // clone; every version's frame is bound to the registry's session so
     // the temp view is visible to interactive queries
-    val next = (stores.get(name), keyed.get(name)) match {
-      case (_, Some(cur)) if cur.keyedBy(keyCols, ord) => cur.merge(batch, ord)
-      case (Some(cur), _) =>
-        KeyedStore(spark, cur.unionByName(KeyedStore.aligned(batch, cur.schema)), keyCols, ord)
-      case (None, _) => KeyedStore(spark, batch, keyCols, ord)
+    val next = entries.get(name) match {
+      case Some(Entry(_, _, Some(cur))) if cur.keyedBy(keyCols, ord) => cur.merge(batch, ord)
+      case Some(Entry(df, _, _)) =>
+        KeyedStore(spark, df.unionByName(KeyedStore.aligned(batch, df.schema)), keyCols, ord)
+      case None => KeyedStore(spark, batch, keyCols, ord)
     }
-    keys.put(name, keyCols.head)
-    keyed.put(name, next)
-    publish(name, next.view)
+    publish(name, Entry(next.view, keyCols.head, Some(next)))
   }
 
-  /** The rows of store `name` a point lookup of `key` on its key column
-    * can match: one partition of an upserted store; `None` for a
-    * registered one, whose whole frame is filtered instead.
+  /** `GET /stores/{s}/{key}`: the rows of store `name` whose key column
+    * equals `key`. An upserted store filters the one partition the key
+    * hashes to ([[KeyedStore.point]]), a registered one its whole frame.
+    * A key that does not cast to the key column's type matches no row,
+    * under ANSI too: it is outside input, not a failure. `None` for an
+    * unknown store.
     */
-  def pointRows(name: String, key: String): Option[DataFrame] =
-    keyed.get(name).map(_.point(key))
+  def lookup(name: String, key: String): Option[DataFrame] = entries.get(name).map { e =>
+    e.keyed.fold(e.df)(_.point(key))
+      .filter(col(e.keyCol) === lit(key).try_cast(e.df.schema(e.keyCol).dataType))
+  }
 
-  private def publish(name: String, df: DataFrame): Unit = {
-    stores.put(name, df)
-    df.createOrReplaceTempView(name)
+  private def publish(name: String, e: Entry): Unit = {
+    entries.put(name, e)
+    e.df.createOrReplaceTempView(name)
   }
 
   /** `GET /stores` — registry.go:131-141. */
-  def storeNames: Seq[String] = stores.keys.toSeq.sorted
-  def store(name: String): DataFrame =
-    stores.getOrElse(name, sys.error(s"unknown store $name"))
-  def keyOf(name: String): String =
-    keys.getOrElse(name, sys.error(s"unknown store $name"))
-  def sql(q: String): DataFrame = spark.sql(q)
+  def storeNames: Seq[String] = entries.keys.toSeq.sorted
+  def store(name: String): DataFrame = get(name).getOrElse(sys.error(s"unknown store $name"))
+  private[state] def get(name: String): Option[DataFrame] = entries.get(name).map(_.df)
 }
 
 /** A4 range/scan and A5 secondary-index lookups over keyed snapshots
   * (store/store.go:175-218, store/indexed_store.go:59-160).
   */
 object Stores {
-
-  /** Point lookup: store.Get (store/store.go:151-173); missing key ⇒ empty. */
-  def get(store: DataFrame, keyCol: String, key: Any): DataFrame =
-    store.filter(col(keyCol) === lit(key))
 
   /** A4 GetRange(from, to) — inclusive, like the backend's RangeIterator
     * (backend/backend.go:22). A predicate, so it partition-prunes / pushes

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
@@ -19,6 +19,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
+import graft.dsl.KStream
 import graft.state.{StoreHttp, StoreRegistry, Upserts}
 
 /** An upserted store is a hash-partitioned, key-indexed state: it must
@@ -83,13 +84,40 @@ class KeyedStoreSpec extends SparkSpec {
     ("composite", Seq("k" -> IntegerType, "k2" -> StringType),
       r => Seq(r.nextInt(5), s"s${r.nextInt(3)}")))
 
+  /** Materializes every batch through the DSL into store `name`. */
+  private def materialized(registry: StoreRegistry, name: String,
+      keys: Seq[(String, DataType)], bs: Seq[Seq[Row]], ord: Seq[Column]): DataFrame = {
+    bs.foreach(b => KStream(frame(b, schema(keys)), keys.map(_._1): _*)
+      .materialize(registry, name, ord))
+    registry.store(name)
+  }
+
   keySpaces.foreach { case (label, keys, keyOf) =>
     test(s"random batch sequences reproduce latestByKey over their union ($label keys)") {
       (1 to 4).foreach { seed =>
-        val (registry, all) = fill(s"ks_$label", keys, batches(seed, keyOf))
-        assert(json(registry.store(s"ks_$label")) ===
-          json(Upserts.latestByKey(all, keys.map(_._1), ord)), s"seed $seed")
+        val bs = batches(seed, keyOf)
+        val (registry, all) = fill(s"ks_$label", keys, bs)
+        val latest = json(Upserts.latestByKey(all, keys.map(_._1), ord))
+        assert(json(registry.store(s"ks_$label")) === latest, s"seed $seed")
+        assert(json(materialized(registry, s"ks_${label}_dsl", keys, bs, ord)) === latest,
+          s"seed $seed, materialize")
       }
+      // versioned: the greatest version wins, ties keep the earliest arrival
+      val bs = batches(5, keyOf)
+      val versioned = materialized(new StoreRegistry(spark), s"ks_${label}_versioned", keys, bs,
+        Seq(col("o"), -col("seq")))
+      assert(json(versioned) === json(Upserts.versionedUpsert(
+        frame(bs.flatten, schema(keys)), keys.map(_._1), col("o"), col("seq"))))
+      // a second materialize on the name merges: a key only the first call
+      // had stays in the store
+      def keyOfRow(r: Row) = r.toSeq.take(keys.size)
+      val only = keyOfRow(bs.flatten.head)
+      val (first, rest) = bs.flatten.partition(r => keyOfRow(r) == only)
+      val twice = materialized(new StoreRegistry(spark), s"ks_${label}_twice", keys,
+        Seq(first, rest), ord)
+      assert(twice.collect().exists(r => keyOfRow(r) == only))
+      assert(json(twice) === json(Upserts.latestByKey(frame(bs.flatten, schema(keys)),
+        keys.map(_._1), ord)))
     }
   }
 
@@ -198,8 +226,10 @@ class KeyedStoreSpec extends SparkSpec {
   }
 
   test("a point lookup runs one task") {
-    val (registry, _) = fill("ks_one", Seq("k" -> LongType),
-      batches(13, r => Seq(r.nextInt(40).toLong)))
+    val keys = Seq("k" -> LongType)
+    val bs = batches(13, r => Seq(r.nextInt(40).toLong))
+    val (registry, _) = fill("ks_one", keys, bs)
+    materialized(registry, "ks_one_dsl", keys, bs, ord)
     val http = new StoreHttp(registry)
     val port = http.start()
     val stages = new ConcurrentLinkedQueue[(String, Int)]()
@@ -209,11 +239,13 @@ class KeyedStoreSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val key = registry.store("ks_one").select("k").as[Long].head()
-      assert(get(port, s"/stores/ks_one/$key").contains(s""""k":$key"""))
+      Seq("ks_one", "ks_one_dsl").foreach { s =>
+        val key = registry.store(s).select("k").as[Long].head()
+        assert(get(port, s"/stores/$s/$key").contains(s""""k":$key"""))
+      }
       def lookups = stages.asScala.filter(_._1.contains("StoreHttp.scala")).toSeq
-      eventually(timeout(Span(30, Seconds)))(assert(lookups.nonEmpty))
-      assert(lookups.map(_._2) === Seq(1))
+      eventually(timeout(Span(30, Seconds)))(assert(lookups.size >= 2))
+      assert(lookups.map(_._2) === Seq(1, 1))
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       http.stop()

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import org.apache.spark.sql.functions._
 
+import graft.dsl.KStream
 import graft.state.{StoreHttp, StoreRegistry}
 
 /** Interactive-query REST surface, mirroring the reference's
@@ -135,5 +136,17 @@ class StoreHttpSpec extends SparkSpec {
     // and it is queryable as a temp view (the "interactive query" path)
     assert(spark.sql("SELECT v FROM live_store WHERE k = 'a'")
       .as[String].head() === "a2")
+  }
+
+  test("KStream.materialize refuses a streaming frame at the call, naming the fix") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val registry = new StoreRegistry(spark)
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String)]
+    val e = intercept[IllegalArgumentException](
+      KStream(mem.toDF().toDF("k", "off", "v"), "k")
+        .materialize(registry, "live_dsl", Seq(col("off"))))
+    assert(e.getMessage.contains("foreachBatch") && e.getMessage.contains("StoreRegistry.upsert"),
+      e.getMessage)
+    assert(registry.storeNames.isEmpty)
   }
 }

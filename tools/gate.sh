@@ -20,13 +20,15 @@
 #   8. no `.rdd` / `createDataFrame(` in src/main/scala/graft/state
 #   9. no `extraStrategies` assignment outside
 #      org/apache/spark/sql/GlobalTableJoins.scala
-#  10. git status --porcelain          (tree clean apart from the staged
+#  10. no `max_by(` in src/main/scala/graft/{dsl,io,state} outside
+#      state/Upserts.scala
+#  11. git status --porcelain          (tree clean apart from the staged
 #                                       change set — run BEFORE `git add`
 #                                       to see what you are about to ship)
 #
 # Usage: tools/gate.sh [sfDir]           (default /root/testdata/sf0.01)
 #   GATE_SKIP_TESTS=1   skip step 1 (when sbt test just ran unchanged)
-#   GATE_ALLOW_DIRTY=1  demote step 10 to a warning (mid-round iteration)
+#   GATE_ALLOW_DIRTY=1  demote step 11 to a warning (mid-round iteration)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -121,6 +123,19 @@ stray="$(grep -rnE 'extraStrategies(_=|\s*(\+\+|:\+|\+:)?=([^=]|$))' src perfben
 if [[ -n "$stray" ]]; then
   echo "$stray"
   echo "install planner strategies through org.apache.spark.sql.GlobalTableJoins.install"
+  fail=1
+else
+  echo "ok"
+fi
+
+# one batch latest-by-key: Upserts.latestByKey owns the max_by argmax,
+# so the dsl, io and state layers call it instead of spelling their own
+step "max_by only in Upserts.scala (dsl, io, state)"
+stray="$(grep -rn 'max_by(' src/main/scala/graft/dsl src/main/scala/graft/io src/main/scala/graft/state |
+  grep -v '^src/main/scala/graft/state/Upserts\.scala:')"
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "compute latest-by-key with graft.state.Upserts.latestByKey"
   fail=1
 else
   echo "ok"
